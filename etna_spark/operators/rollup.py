@@ -79,6 +79,31 @@ def rollup(
     )
 
 
+def row_partials(
+    df: DataFrame,
+    tier: str,
+    series_cols: Sequence[str] = ("source",),
+    ts_col: str = "event_ts",
+    value_col: str = "n_tok",
+    sum_is_exact: bool = True,
+) -> DataFrame:
+    """Each raw row as a one-row aggregate in the tier schema, with the
+    types :func:`rollup` gives, so ``rollup_cascade(row_partials(df, t), t)``
+    ≡ ``rollup(df, t)``. Raw rows and existing tier rows then merge in one
+    aggregation (one shuffle) instead of a rollup followed by a merge."""
+    v = F.col(value_col)
+    wide = v.cast("long") if sum_is_exact else v
+    return df.select(
+        *series_cols,
+        bucket(ts_col, tier).alias("bucket_ts"),
+        v.isNotNull().cast("long").alias("point_count"),
+        wide.alias("value_sum"),
+        v.alias("value_min"),
+        v.alias("value_max"),
+        (wide * wide).alias("value_sumsq"),
+    )
+
+
 def rollup_cascade(
     tier_df: DataFrame,
     to_tier: str,

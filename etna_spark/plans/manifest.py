@@ -1,19 +1,21 @@
-"""Job manifest: checkpoints, per-partition lineage, and run metrics.
+"""Job manifest: per-partition lineage, run metrics and watermark records.
 
 North-rule requirement: jobs are resumable from snapshot checkpoints with
 per-partition lineage and metrics emitted to a manifest table. The manifest
 is a small append-only JSON-lines log next to the warehouse (at scale: an
-Iceberg table written with the same records).
+Iceberg table written with the same records). The checkpoint itself is not
+here: it is the ``input_snapshot_id`` property of each tier table's newest
+snapshot, committed in the same log swap as the data.
 
 Records:
-- ``watermark``: {tier, input_snapshot_id} — the high-water mark; a refresh
-  reads only input appended after it. Written AFTER the tier commit, so a
-  crash between commit and watermark is safe: the rerun reprocesses the same
-  delta into the same partitions (idempotent overwrite).
+- ``watermark``: {tier, input_snapshot_id} — an observability copy of the
+  checkpoint, written after the tier commit. Refresh never reads it.
 - ``lineage``: one per (run, tier, partition): rows_in, points_out,
-  wall_time_sec, checksum (order-insensitive xor-hash of the partition's
-  rows — cheap verifiable fingerprint).
-- ``metrics``: per run: totals for observability.
+  wall_time_sec, checksum (order-insensitive: the sum over the partition's
+  rows of ``pmod(xxhash64(series, bucket_ts, value_sum, point_count),
+  1e9+7)`` — cheap verifiable fingerprint).
+- ``metrics``: per run and tier: totals, wall time of the whole commit and
+  the number of Spark jobs it ran.
 
 The reference has no equivalent (its 'state' is fitted transform objects,
 SURVEY.md §3.2); this is the lakehouse analogue.
@@ -50,6 +52,8 @@ class Manifest:
     # -- watermarks -----------------------------------------------------------
 
     def watermark(self, tier: str) -> int:
+        """Newest recorded watermark of ``tier``: an observability reader
+        (refresh uses the tier table's snapshot property instead)."""
         wm = 0
         for r in self.records():
             if r.get("kind") == "watermark" and r.get("tier") == tier:

@@ -10,7 +10,14 @@ SNAPSHOT CONTRACT the engine needs and implements it over plain parquet:
 - ``read_delta(table, after_id, until_id)`` sees only files appended in
   (after_id, until_id] — the incremental-refresh input;
 - ``overwrite_partitions`` atomically replaces the files of a partition
-  subset (the tier-refresh MERGE target).
+  subset (the tier-refresh MERGE target);
+- ``partitions()`` and ``read(..., partitions=...)`` list and prune by the
+  recorded file → partition map, so a refresh opens only the files of the
+  days it touches.
+
+Snapshots record the Spark schema of the rows they write (whenever it
+changes), and reads pass it to the parquet reader, so opening a table starts
+no schema-inference job.
 
 With Iceberg the same calls map to ``table.snapshot_id``, incremental scan
 (``start-snapshot-id``/``end-snapshot-id``) and ``overwritePartitions()``;
@@ -34,10 +41,12 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -50,6 +59,9 @@ class Snapshot:
     # advance are ONE atomic operation (no crash window can double-apply a
     # delta)
     properties: dict | None = None
+    # Spark schema (``StructType.jsonValue()``) of the rows this snapshot
+    # wrote, recorded only where it differs from the one before
+    schema: dict | None = None
 
 
 class ParquetSnapshotTable:
@@ -79,14 +91,22 @@ class ParquetSnapshotTable:
             json.dump([s.__dict__ for s in snaps], f, indent=1)
         os.replace(tmp, self._log_path)  # atomic commit point
 
-    # -- io -------------------------------------------------------------------
+    @staticmethod
+    def _schema(snaps: list[Snapshot]) -> dict | None:
+        """The schema in force after ``snaps``: the newest recorded one."""
+        return next((s.schema for s in reversed(snaps) if s.schema), None)
 
-    def _files_upto(self, snapshot_id: int | None) -> list[str]:
-        out = []
-        for s in self.snapshots():
-            if snapshot_id is None or s.id <= snapshot_id:
-                out.extend(s.files)
-        return out
+    def _commit(self, snaps: list[Snapshot], files: list[str],
+                properties: dict | None, schema: dict | None) -> int:
+        if schema == self._schema(snaps):
+            schema = None
+        new_id = (snaps[-1].id if snaps else 0) + 1
+        snaps.append(Snapshot(id=new_id, files=files, wall_time=time.time(),
+                              properties=properties, schema=schema))
+        self._write_log(snaps)
+        return new_id
+
+    # -- io -------------------------------------------------------------------
 
     def _stage_df(self, df: DataFrame) -> list[str]:
         """Write df into an immutable staging dir, return relative file paths."""
@@ -99,17 +119,40 @@ class ParquetSnapshotTable:
             if f.endswith(".parquet")
         ]
 
+    def _stage_partitioned(self, df: DataFrame, partition_col: str) -> dict[str, str]:
+        """Write df with one ``partitionBy`` job into an immutable staging
+        dir, move the files up out of the ``<col>=<value>`` directories so
+        the layout stays flat (``data-<uuid>/*.parquet``: compaction and
+        storage walks look one level deep), and return relative file path
+        -> partition value (read from the directory names).
+
+        The write partitions by a copy of ``partition_col``: ``partitionBy``
+        drops its column from the data files, and the files must keep it."""
+        stage = f"data-{uuid.uuid4().hex}"
+        out_dir = os.path.join(self.root, stage)
+        by = f"__{partition_col}"
+        (df.withColumn(by, F.col(partition_col))
+         .write.mode("overwrite").partitionBy(by).parquet(out_dir))
+        file_parts: dict[str, str] = {}
+        for i, d in enumerate(sorted(os.listdir(out_dir))):
+            sub = os.path.join(out_dir, d)
+            if not os.path.isdir(sub):
+                continue
+            value = unquote(d.split("=", 1)[1])  # Spark %XX-escapes paths
+            for f in sorted(os.listdir(sub)):
+                if f.endswith(".parquet"):
+                    # each partition dir restarts the task file names
+                    rel = os.path.join(stage, f"p{i}-{f}")
+                    os.rename(os.path.join(sub, f), os.path.join(self.root, rel))
+                    file_parts[rel] = value
+            shutil.rmtree(sub)
+        return file_parts
+
     def append(self, df: DataFrame, properties: dict | None = None) -> int:
         """Append rows as a new snapshot; returns its id."""
         files = self._stage_df(df)
-        snaps = self.snapshots()
-        new_id = (snaps[-1].id if snaps else 0) + 1
-        snaps.append(
-            Snapshot(id=new_id, files=files, wall_time=time.time(),
-                     properties=properties)
-        )
-        self._write_log(snaps)
-        return new_id
+        return self._commit(self.snapshots(), files, properties,
+                            df.schema.jsonValue())
 
     def latest_property(self, key: str, default=None):
         """Highest-snapshot value of a snapshot property (watermark reads)."""
@@ -118,24 +161,43 @@ class ParquetSnapshotTable:
                 return s.properties[key]
         return default
 
-    def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
-        files = self._files_upto(snapshot_id)
+    def _scan(self, spark: SparkSession, after_id: int, until_id: int | None,
+              partitions: list | None = None) -> DataFrame | None:
+        """The files of snapshots (after_id, until_id] (only those recorded
+        under one of ``partitions``, if given), read with the schema in
+        force at ``until_id``; None when no file is left."""
+        snaps = [s for s in self.snapshots()
+                 if until_id is None or s.id <= until_id]
+        files = [f for s in snaps if s.id > after_id for f in s.files]
+        if partitions is not None:
+            wanted = set(map(str, partitions))
+            part_map = self._partition_map()
+            files = [f for f in files if part_map.get(f, set()) & wanted]
         if not files:
+            return None
+        schema = self._schema(snaps)
+        reader = spark.read
+        if schema is not None:  # logs written before schemas were recorded
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*[os.path.join(self.root, f) for f in files])
+
+    def read(
+        self, spark: SparkSession, snapshot_id: int | None = None,
+        partitions: list | None = None,
+    ) -> DataFrame:
+        """Rows of snapshots ≤ ``snapshot_id`` (default: all), pruned to the
+        files of ``partitions`` when given."""
+        df = self._scan(spark, 0, snapshot_id, partitions)
+        if df is None:
             raise ValueError(f"table {self.root} is empty")
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+        return df
 
     def read_delta(
         self, spark: SparkSession, after_id: int, until_id: int
     ) -> DataFrame | None:
         """Rows appended in snapshots (after_id, until_id] — the incremental
         scan."""
-        files = []
-        for s in self.snapshots():
-            if after_id < s.id <= until_id:
-                files.extend(s.files)
-        if not files:
-            return None
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+        return self._scan(spark, after_id, until_id)
 
     # -- partition-scoped overwrite (tier tables) ------------------------------
 
@@ -147,45 +209,36 @@ class ParquetSnapshotTable:
         contain only those partitions). Files of other partitions are kept.
         Maps to Iceberg ``overwritePartitions()``.
 
-        Each partition value is staged as its own file group, so the
-        file→partition mapping is exact — retention and later overwrites
-        retire whole files, never rewrite them. (A refresh only touches the
-        partitions its delta covers, so the per-partition write fan-out is
-        small by construction.)"""
-        df = df.cache()
-        try:
-            files: list[str] = []
-            file_parts: dict[str, str] = {}
-            for v in partition_values:
-                part_files = self._stage_df(df.filter(F.col(partition_col) == F.lit(v)))
-                files.extend(part_files)
-                for f in part_files:
-                    file_parts[f] = str(v)
-        finally:
-            df.unpersist()
-        snaps = self.snapshots()
-        part_map = self._partition_map()
+        ``df`` is written by ONE ``partitionBy`` job, so every file holds
+        exactly one partition value and the file → partition map comes from
+        the output directory names, with no extra Spark job. Retention and
+        later overwrites retire whole files, never rewrite them."""
+        file_parts = self._stage_partitioned(df, partition_col)
         wanted = set(map(str, partition_values))
-        retired = {f for f, parts in part_map.items() if parts & wanted}
-        kept_snaps = [
-            # keep historical properties: latest_property() walks the whole
-            # log, so dropping them here would erase the tier watermark that
-            # _refresh_tier reads (double-apply hazard after retention)
-            Snapshot(id=s.id, files=[f for f in s.files if f not in retired],
-                     wall_time=s.wall_time, properties=s.properties)
-            for s in snaps
-        ]
-        new_id = (snaps[-1].id if snaps else 0) + 1
-        kept_snaps.append(
-            Snapshot(id=new_id, files=files, wall_time=time.time(),
-                     properties=properties)
-        )
+        stray = set(file_parts.values()) - wanted
+        if stray:
+            # nothing is committed: the staged files stay orphans for
+            # compact_files
+            raise ValueError(f"rows outside the named partitions: {sorted(stray)}")
+        snaps = self.snapshots()
+        retired = {f for f, parts in self._partition_map().items() if parts & wanted}
+        kept_snaps = self._retire(snaps, retired)
         # partition sidecar first, snapshot log last: the log write is the
         # atomic commit point, and the sidecar only matters for files the log
         # references
         self._set_partition_map_entries(file_parts)
-        self._write_log(kept_snaps)
-        return new_id
+        return self._commit(kept_snaps, sorted(file_parts), properties,
+                            df.schema.jsonValue())
+
+    @staticmethod
+    def _retire(snaps: list[Snapshot], retired: set[str]) -> list[Snapshot]:
+        """``snaps`` without the ``retired`` files. Everything else stays:
+        latest_property() walks the whole log, so dropping historical
+        properties would erase the tier watermark that _refresh_tier reads
+        (double-apply hazard after retention), and reads take the schema
+        from the newest snapshot that recorded one."""
+        return [replace(s, files=[f for f in s.files if f not in retired])
+                for s in snaps]
 
     # partition sidecar: file -> set of partition values it contains
     @property
@@ -197,6 +250,18 @@ class ParquetSnapshotTable:
             return {}
         with open(self._part_map_path) as f:
             return {k: set(v) for k, v in json.load(f).items()}
+
+    def partitions(self, after_id: int = 0, until_id: int | None = None) -> set[str]:
+        """Partition values of the live files added by snapshots
+        (after_id, until_id]; by default every partition the table holds.
+        Reads only the catalog's own files, never the data."""
+        part_map = self._partition_map()
+        out: set[str] = set()
+        for s in self.snapshots():
+            if after_id < s.id and (until_id is None or s.id <= until_id):
+                for f in s.files:
+                    out |= part_map.get(f, set())
+        return out
 
     def _set_partition_map_entries(self, file_parts: dict[str, str]) -> None:
         m = self._partition_map()
@@ -217,12 +282,7 @@ class ParquetSnapshotTable:
         part_map = self._partition_map()
         retired = {f for f, parts in part_map.items() if parts and parts <= vals}
         snaps = self.snapshots()
-        kept = [
-            Snapshot(id=s.id, files=[f for f in s.files if f not in retired],
-                     wall_time=s.wall_time, properties=s.properties)
-            for s in snaps
-        ]
-        new_id = (snaps[-1].id if snaps else 0) + 1
+        kept = self._retire(snaps, retired)
         # carry the current watermark forward on the retention snapshot too,
         # so even a log rewrite that trims history keeps the watermark visible
         props = {}
@@ -230,23 +290,25 @@ class ParquetSnapshotTable:
             if s.properties:
                 props = dict(s.properties)
                 break
-        kept.append(Snapshot(id=new_id, files=[], wall_time=time.time(),
-                             properties=props or None))
-        self._write_log(kept)
-        return new_id
+        return self._commit(kept, [], props or None, None)
 
     def compact_files(self) -> None:
         """Physically delete files no longer referenced by any snapshot
-        (expire_snapshots equivalent)."""
+        (expire_snapshots equivalent). A staging dir none of whose files is
+        live — replaced, expired, or left by a write killed before its log
+        swap, partition subdirectories included — is removed whole."""
         live = set()
         for s in self.snapshots():
             live.update(s.files)
+        live_dirs = {f.split(os.sep, 1)[0] for f in live}
         for d in os.listdir(self.root):
             p = os.path.join(self.root, d)
-            if d.startswith("data-") and os.path.isdir(p):
-                for f in os.listdir(p):
-                    rel = os.path.join(d, f)
-                    if f.endswith(".parquet") and rel not in live:
-                        os.remove(os.path.join(self.root, rel))
-                if not os.listdir(p):
-                    shutil.rmtree(p)
+            if not (d.startswith("data-") and os.path.isdir(p)):
+                continue
+            if d not in live_dirs:
+                shutil.rmtree(p)
+                continue
+            for f in os.listdir(p):
+                rel = os.path.join(d, f)
+                if f.endswith(".parquet") and rel not in live:
+                    os.remove(os.path.join(self.root, rel))

@@ -1,12 +1,19 @@
 """Tier engine tests (FIXTURES.md §B5): incremental refresh ≡ full
 recompute, rerun-after-kill is a no-op, retention drops partitions,
-token-array invariance through the pipeline."""
+token-array invariance through the pipeline, and the commit path's shape:
+a bounded number of Spark jobs per tier, one write per tier, lineage equal
+to the committed files, one partition per file, orphaned staging dirs
+ignored and compacted."""
 
 from __future__ import annotations
 
-import numpy as np
+import os
+import time
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from etna_spark.operators.rollup import rollup
 from etna_spark.plans.tiers import TierEngine
@@ -197,3 +204,200 @@ def test_token_arrays_flow_through_untouched(spark, tmp_path):
         .collect()[0][0]
     )
     assert checks is True
+
+
+# -- commit path --------------------------------------------------------------
+
+TIERS = ("1m", "1h", "1d")
+
+
+def _one_day_extra(spark, prefix: str, day: str):
+    return (
+        token_table(spark, 500, with_tokens=False)
+        .withColumn("doc_id", F.concat(F.lit(prefix), "doc_id"))
+        .filter(F.date_format("event_ts", "yyyy-MM-dd") == day)
+    )
+
+
+def _newest_metrics(eng) -> dict[str, dict]:
+    out = {}
+    for r in eng.manifest.records():
+        if r["kind"] == "metrics":
+            out[r["tier"]] = r
+    return out
+
+
+def test_incremental_refresh_job_budget(spark, tokens_df, tmp_path):
+    """After a seed refresh, a one-day append + refresh runs at most 4 Spark
+    jobs per tier (the manifest's count) and at most 12 in all (counted here
+    in a job group of the test's own)."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    eng.input.append(_one_day_extra(spark, "j_", "2026-01-02"))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("tier-job-budget", "incremental tier refresh")
+    try:
+        r = eng.refresh(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(1)  # the status tracker is fed asynchronously
+    total = len(sc.statusTracker().getJobIdsForGroup("tier-job-budget"))
+
+    assert all(r[t]["partitions"] == ["2026-01-02"] for t in TIERS)
+    metrics = _newest_metrics(eng)
+    per_tier = {t: metrics[t]["spark_jobs"] for t in TIERS}
+    assert all(1 <= n <= 4 for n in per_tier.values()), per_tier
+    assert sum(per_tier.values()) <= total <= 12, (per_tier, total)
+    # wall time covers the whole commit, lineage included
+    assert all(metrics[t]["wall_time_sec"] > 0 for t in TIERS)
+
+
+def test_lineage_matches_committed_files(spark, tokens_df, tmp_path):
+    """After an incremental refresh, every tier's newest lineage record per
+    partition equals a checksum/points recomputation from the files."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    part1 = tokens_df.filter(F.xxhash64("doc_id") % 10 < 7)
+    eng.input.append(part1)
+    eng.refresh(spark)
+    eng.input.append(tokens_df.subtract(part1))
+    eng.refresh(spark)
+
+    lineage = {}
+    for r in eng.manifest.records():
+        if r["kind"] == "lineage":
+            lineage[(r["tier"], r["partition"])] = r
+    for tier in TIERS:
+        got = (
+            eng.tier_df(spark, tier)
+            .groupBy("part_day")
+            .agg(
+                F.sum(F.pmod(F.xxhash64("source", "bucket_ts", "value_sum",
+                                        "point_count"),
+                             F.lit(1_000_000_007))).alias("checksum"),
+                F.count("*").alias("points"),
+            )
+            .collect()
+        )
+        assert got
+        for r in got:
+            rec = lineage[(tier, r["part_day"])]
+            assert (rec["checksum"], rec["points_out"]) == (r["checksum"], r["points"])
+
+
+def test_tier_files_hold_one_partition(spark, tokens_df, tmp_path):
+    """Every committed tier file sits flat in a ``data-<uuid>/`` dir and
+    holds exactly one ``part_day`` (a column in the file), the one the
+    partition map records for it."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    eng.input.append(_one_day_extra(spark, "p_", "2026-01-03"))
+    eng.refresh(spark)
+    for tier in TIERS:
+        table = eng.tiers[tier]
+        part_map = table._partition_map()
+        files = [f for s in table.snapshots() for f in s.files]
+        assert files
+        for f in files:
+            stage, name = f.split(os.sep)
+            assert stage.startswith("data-") and name.endswith(".parquet")
+            days = set(pq.read_table(os.path.join(table.root, f),
+                                     columns=["part_day"])["part_day"].to_pylist())
+            assert len(days) == 1 and days == part_map[f], (f, days, part_map[f])
+        assert table.partitions() == {d for f in files for d in part_map[f]}
+
+
+def test_killed_partitioned_write_ignored_and_compacted(spark, tokens_df, tmp_path,
+                                                        monkeypatch):
+    """A partitioned staging dir left by a kill before the log swap (files
+    moved up, or still in their ``<col>=<value>`` subdirs) is not read, the
+    rerun converges to the clean result, and ``compact_files`` removes it."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    extra = _one_day_extra(spark, "k_", "2026-01-02")
+    eng.input.append(extra)
+    t1m = eng.tiers["1m"]
+    before = set(os.listdir(t1m.root))
+
+    def killed(snaps):
+        raise RuntimeError("killed before the log swap")
+
+    monkeypatch.setattr(t1m, "_write_log", killed)
+    with pytest.raises(RuntimeError):
+        eng.refresh(spark)
+    monkeypatch.undo()
+    (moved,) = set(os.listdir(t1m.root)) - before
+    assert moved.startswith("data-")
+    # a kill during the Spark write leaves the partition subdirs in place
+    unmoved = os.path.join(t1m.root, "data-killed")
+    (eng.tier_df(spark, "1m").withColumn("__part_day", F.col("part_day"))
+     .write.partitionBy("__part_day").parquet(unmoved))
+    assert any(d.startswith("__part_day=") for d in os.listdir(unmoved))
+
+    eng.refresh(spark)
+    clean = TierEngine(str(tmp_path / "clean"))
+    clean.input.append(tokens_df)
+    clean.input.append(extra)
+    clean.refresh(spark)
+    for tier in TIERS:
+        assert _tiers_equal(eng.tier_df(spark, tier), clean.tier_df(spark, tier))
+
+    t1m.compact_files()
+    left = set(os.listdir(t1m.root))
+    assert moved not in left and "data-killed" not in left
+    live = [f for s in t1m.snapshots() for f in s.files]
+    assert all(os.path.exists(os.path.join(t1m.root, f)) for f in live)
+    assert _tiers_equal(eng.tier_df(spark, "1m"), clean.tier_df(spark, "1m"))
+
+
+def test_seven_day_input_one_write_per_tier(spark, tmp_path, monkeypatch):
+    """A refresh over a 7-day input commits each tier with one parquet
+    write (not one per day) and stays within the per-tier job budget."""
+    week = token_table(spark, 3000, with_tokens=False, window_seconds=7 * 86400)
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(week)
+
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def counting(self, path, *args, **kwargs):
+        writes.append(path)
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    r = eng.refresh(spark)
+    monkeypatch.undo()
+
+    assert len(writes) == len(TIERS)
+    metrics = _newest_metrics(eng)
+    for tier in TIERS:
+        assert len(r[tier]["partitions"]) == 7
+        assert eng.tiers[tier].partitions() == set(r[tier]["partitions"])
+        assert metrics[tier]["spark_jobs"] <= 4
+    direct = rollup(week, "1h").withColumn(
+        "part_day", F.date_format("bucket_ts", "yyyy-MM-dd"))
+    assert _tiers_equal(eng.tier_df(spark, "1h").select(*direct.columns), direct)
+
+
+def test_null_values_merge_like_rollup(spark, tokens_df, tmp_path):
+    """Rows with a null value merge incrementally exactly like a direct
+    rollup (point_count skips them), and lineage rows_in still counts them."""
+    nulls = tokens_df.withColumn(
+        "n_tok", F.when(F.xxhash64("doc_id") % 5 == 0, None).otherwise(F.col("n_tok")))
+    first = nulls.filter(F.xxhash64("doc_id") % 2 == 0)
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(first)
+    eng.refresh(spark)
+    eng.input.append(nulls.subtract(first))
+    eng.refresh(spark)
+    for tier in TIERS:
+        direct = rollup(nulls, tier).withColumn(
+            "part_day", F.date_format("bucket_ts", "yyyy-MM-dd"))
+        assert _tiers_equal(eng.tier_df(spark, tier).select(*direct.columns), direct)
+    rows_in = sum(r["rows_in"] for r in eng.manifest.records()
+                  if r["kind"] == "lineage" and r["tier"] == "1m")
+    assert rows_in == tokens_df.count()
