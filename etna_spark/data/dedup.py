@@ -285,7 +285,8 @@ def minhash_band_pairs(
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash: long) — 64-bit SimHash over word hashes.
+    """(id, simhash: long) — 64-bit SimHash over word hashes; rows with
+    null text are dropped.
 
     For each bit j, sum ±1 over the words' hashes; bit j of the result is 1
     when the sum is positive. Vectorized as a 64-element higher-order-

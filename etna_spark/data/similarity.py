@@ -18,7 +18,7 @@ The LSH signature derives hyperplane weights from a hash of
 
 from __future__ import annotations
 
-import os
+import math
 from collections.abc import Sequence
 
 import numpy as np
@@ -26,7 +26,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -122,6 +128,12 @@ def _hyperplane_sign(vec: Column, plane: int, dim: int) -> Column:
     ).cast("int")
 
 
+def _valid_norm(n: Column) -> Column:
+    """A norm that defines a cosine: positive and not NaN. Spark orders NaN
+    above every double, so ``n > 0`` alone would admit it."""
+    return (n > 0) & ~F.isnan(n)
+
+
 def _sig_kernel(n_planes: int, dim: int, n_tables: int):
     """Arrow-vectorized multi-table signature kernel: bit-identical to the
     ``lsh_signature`` expression chain (same mixed-hash weights, same sequential
@@ -130,16 +142,26 @@ def _sig_kernel(n_planes: int, dim: int, n_tables: int):
     computed for all (row, plane) cells at once), ~20× the throughput of
     the per-plane ``zip_with`` expressions, whose per-row array
     allocations made the signature stage allocation-bound (measured 36 s
-    → 4 s at 400k×dim32×72 planes on 2 cores). Equivalence to the
-    expression path is pinned by a property test."""
+    → 4 s at 400k×dim32×72 planes on 2 cores).
+
+    Returns ``struct<sig: array<bigint>, pf: array<double>>``: ``pf`` is
+    the first ``min(4, dim)`` coordinates of the unit vector, ``v_i /
+    norm(v)`` with the norm folded left to right in index order exactly
+    as :func:`norm` does, and null wherever :func:`_valid_norm` fails
+    (an infinite norm still gives ``v_i / inf``). Both outputs are
+    pinned to their Spark-expression twins by a property test."""
     total = n_tables * n_planes
+    m = min(4, dim)
     weights = np.array(
         [[_plane_weight(p * dim + i) for p in range(total)] for i in range(dim)],
         dtype=np.float64,
     )
 
-    @pandas_udf(ArrayType(LongType()))
-    def sigs(vs: pd.Series) -> pd.Series:
+    @pandas_udf(StructType([
+        StructField("sig", ArrayType(LongType())),
+        StructField("pf", ArrayType(DoubleType())),
+    ]))
+    def sigs(vs: pd.Series) -> pd.DataFrame:
         if len(vs) and isinstance(vs.iloc[0], np.ndarray):
             # Arrow hands list<float> cells over as numpy arrays —
             # np.stack + astype widens float32→float64 exactly (same
@@ -153,15 +175,29 @@ def _sig_kernel(n_planes: int, dim: int, n_tables: int):
             raise ValueError(
                 f"expected fixed-length dim={dim} vectors, got shape {mat.shape}"
             )
-        acc = np.zeros((len(mat), total), dtype=np.float64)
-        for i in range(dim):
-            acc += mat[:, i : i + 1] * weights[i]
-        bits = (acc > 0).astype(np.int64)
-        out = np.zeros((len(mat), n_tables), dtype=np.int64)
+        # (plane, row) layout: every step is one contiguous multiply-add
+        # over the whole batch, ~2× faster than (row, plane); each cell
+        # still sees the same products in the same order
+        cols = np.ascontiguousarray(mat.T)
+        acc = np.zeros((total, len(mat)), dtype=np.float64)
+        ss = np.zeros(len(mat), dtype=np.float64)
+        with np.errstate(over="ignore"):  # huge vectors: ss → inf, as in Spark
+            for i in range(dim):
+                acc += weights[i][:, None] * cols[i]
+                ss += cols[i] * cols[i]
+        bits = acc > 0
+        out = np.zeros((n_tables, len(mat)), dtype=np.int64)
         for t in range(n_tables):
             for p in range(n_planes):
-                out[:, t] = out[:, t] * 2 + bits[:, t * n_planes + p]
-        return pd.Series(list(out))
+                out[t] = out[t] * 2 + bits[t * n_planes + p]
+        n = np.sqrt(ss)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            pf = mat[:, :m] / n[:, None]
+        valid = (n > 0) & ~np.isnan(n)
+        return pd.DataFrame({
+            "sig": list(np.ascontiguousarray(out.T)),
+            "pf": [row if ok else None for row, ok in zip(pf, valid)],
+        })
 
     return sigs
 
@@ -295,37 +331,33 @@ def embedding_signatures(
     n_planes: int = 8,
     dim: int = 64,
     n_tables: int = 4,
-    backend: str = "arrow",
 ) -> DataFrame:
-    """``(_id, _table, _sig)`` — one multi-table hyperplane-LSH signature
-    row per (vector, table), SLIM: no vector payload. Split out of
-    :func:`embedding_neardup_pairs` so callers (e.g. the benchmark) can
-    cache it explicitly when they reuse it across calls (since the r6
-    rewrites the pair path itself reads it once — through the payload
-    attach join into the bucket groupBy). Keeping the 24-byte id/table/sig rows —
-    not the ``dim``-double vectors — is what makes the candidate
-    self-join shuffle signature-sized instead of corpus-sized; vectors
-    re-enter only for the candidate-pair rescore, keyed by id.
+    """``(_id, _pf, _table, _sig)`` — one multi-table hyperplane-LSH
+    signature row per (vector, table), SLIM: no vector payload. Split out
+    of :func:`embedding_neardup_pairs` so callers (e.g. the benchmark) can
+    cache it explicitly when they reuse it across calls. Keeping the
+    id/table/sig rows plus the ``min(4, dim)``-double pre-filter
+    projection ``_pf`` — not the ``dim``-double vectors — is what makes
+    the candidate exchange signature-sized instead of corpus-sized;
+    vectors re-enter only for the candidate-pair rescore, keyed by id.
 
-    ``backend="arrow"`` (default) computes all ``n_tables × n_planes``
-    projections in one vectorized numpy kernel per Arrow batch —
-    bit-identical to the ``"expr"`` JVM expression path (property-tested,
-    ``test_data_ops.py``) but ~10× faster at high plane counts."""
-    base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if backend == "arrow":
-        tables = _sig_kernel(n_planes, dim, n_tables)(F.col("_v"))
-    elif backend == "expr":
-        tables = F.array(
-            *[
-                lsh_signature(F.col("_v"), n_planes, dim,
-                              plane_offset=t * n_planes)
-                for t in range(n_tables)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown backend '{backend}' (use 'arrow' or 'expr')")
-    return base.select(
-        "_id", F.posexplode(tables).alias("_table", "_sig")
+    All ``n_tables × n_planes`` projections and ``_pf`` come from one
+    vectorized numpy kernel per Arrow batch (:func:`_sig_kernel`),
+    bit-identical to :func:`lsh_signature` and to ``v_i / norm(v)``
+    (property-tested, ``test_data_ops.py``) but ~10× faster than the
+    expression chain at high plane counts."""
+    # Nondeterministic only to the optimizer: it must not copy the kernel
+    # call into the size(sig) > 0 filter it infers from the posexplode
+    # (that plan ships every vector to Python twice). Separate selects:
+    # referencing a same-select alias from posexplode trips Spark's
+    # lateral-column-alias resolution (INTERNAL_ERROR), and exploding a
+    # plain array column keeps the struct out of the exploded rows.
+    k = _sig_kernel(n_planes, dim, n_tables).asNondeterministic()
+    return (
+        df.select(F.col(id_col).alias("_id"), k(F.col(vec_col)).alias("_k"))
+        .select("_id", F.col("_k.pf").alias("_pf"),
+                F.col("_k.sig").alias("_sigs"))
+        .select("_id", "_pf", F.posexplode("_sigs").alias("_table", "_sig"))
     )
 
 
@@ -336,7 +368,7 @@ def bucket_pairs(
     max_bucket: int | None = None,
     distinct: bool = True,
     payload_col: str | None = None,
-    pair_filter=None,
+    max_payload_gap: float | None = None,
     emit_payloads: bool = False,
 ) -> DataFrame:
     """Distinct unordered id pairs that share a bucket — ONE hash
@@ -361,15 +393,15 @@ def bucket_pairs(
     only redundant map-side rescores (bounded by the table/band count).
 
     ``payload_col`` carries one extra column into the member list (as a
-    struct field alongside the id) and ``pair_filter(pa, pb) -> Column``
-    — which MUST be symmetric in its arguments (it is applied in member-
-    list order, before id normalization) — prunes pairs MAP-SIDE during
-    expansion from the two payloads — the
-    hook for provably-safe pre-filters (e.g. the per-coordinate
-    unit-vector bound in :func:`embedding_neardup_pairs`) that shrink the
-    candidate set before it ever reaches an exchange. Ids stay the
-    ordering key (they are unique within a bucket, and the id is the
-    struct's first field, so least/greatest still normalizes by id).
+    struct field alongside the id). With ``max_payload_gap`` (array
+    payloads) a pair is kept only if every coordinate of its two payload
+    arrays differs by at most the gap — symmetric by construction, and
+    applied MAP-SIDE during expansion, so a provably-safe pre-filter (the
+    per-coordinate unit-vector bound in :func:`embedding_neardup_pairs`)
+    shrinks the candidate set before it ever reaches an exchange. A null
+    payload or coordinate fails the gap. Ids stay the ordering key (the
+    id is the struct's first field, so least/greatest still normalizes
+    by id).
 
     ``emit_payloads=True`` (requires ``payload_col``) additionally
     returns the two payloads as ``pay_a`` / ``pay_b`` columns — for
@@ -379,8 +411,8 @@ def bucket_pairs(
     SURVIVORS instead of raw candidates, deleting both payload-attach
     joins (r6, guide §2.3/§2.4).
     """
-    if emit_payloads and payload_col is None:
-        raise ValueError("emit_payloads requires payload_col")
+    if payload_col is None and (emit_payloads or max_payload_gap is not None):
+        raise ValueError("emit_payloads/max_payload_gap require payload_col")
     if payload_col is not None:
         entry = F.struct(
             F.col(id_col).alias("i"), F.col(payload_col).alias("p")
@@ -399,22 +431,24 @@ def bucket_pairs(
     def expand(x, i):
         rest = F.slice(F.col("_ms"), i + F.lit(2), n - i - F.lit(1))
 
-        # filter BEFORE building the normalized pair struct: the
-        # filter must hold for the pair regardless of orientation
-        # (pair_filter is documented symmetric), and skipping the
-        # struct + least/greatest for failing pairs avoids ~12× the
-        # survivor count in per-pair allocations at bench params
-        # (16.6M raw pairs → 1.37M surviving the projection bound).
+        # filter BEFORE building the normalized pair struct: the gap
+        # test is symmetric, so orientation does not matter, and
+        # skipping the struct + least/greatest for failing pairs avoids
+        # ~12× the survivor count in per-pair allocations at bench
+        # params (16.6M raw pairs → 1.37M surviving the projection bound).
         # The id-inequality guard preserves the pre-r6 self-join
         # contract (`id_a < id_b` strict): a duplicated id in dirty
         # input must not emit an (x, x) pair (r6 review fix).
         def keep(y):
-            if payload_col is not None:
-                c = y["i"] != x["i"]
-                if pair_filter is not None:
-                    c = c & pair_filter(x["p"], y["p"])
-            else:
-                c = y != x
+            if payload_col is None:
+                return y != x
+            c = y["i"] != x["i"]
+            if max_payload_gap is not None:
+                c = c & F.forall(
+                    F.zip_with(x["p"], y["p"],
+                               lambda a, b: F.abs(a - b) <= max_payload_gap),
+                    lambda ok: ok,
+                )
             return c
 
         rest = F.filter(rest, keep)
@@ -445,7 +479,6 @@ def embedding_neardup_pairs(
     n_tables: int = 4,
     max_bucket: int = 10000,
     signatures: DataFrame | None = None,
-    compact_rescore: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine ≥ threshold, LSH-bucketed
     candidates (embedding-based near-dedup for training corpora).
@@ -454,106 +487,46 @@ def embedding_neardup_pairs(
     rotation as :func:`cosine_topk_lsh`) so a near-dup pair whose
     differing bits fall inside one table's slice still collides in
     another; candidates come from ONE ``groupBy(table, sig)`` over the
-    SLIM ``(id, table, sig)`` rows with map-side pair expansion
+    SLIM ``(id, pf, table, sig)`` rows with map-side pair expansion
     (:func:`bucket_pairs` — the hot-bucket ``max_bucket`` cap is a
     ``size()`` filter on the member list, and the former 6-exchange
     bucket-size-agg + cap-join + self-join chain collapses to 2
     exchanges); the ``dim``-double vectors enter only at the rescore.
 
-    Rescore shape: the candidate set is usually much larger than the
-    survivor set (random LSH collisions), so attaching vectors to pairs
-    is the expensive step. Under the compact gate
-    (``compact_rescore=None`` auto-decides from the optimizer's size
-    estimate: ≤ ``SPARK_GRAFT_NEARDUP_BCAST_MAX_BYTES``, default 256 MB
-    of estimated input — a statistics read, not a count job, so the
-    gate costs nothing per invocation) the plan applies the projection
-    pre-filter (below) and attaches vectors with SHUFFLE_HASH-hinted
-    id-keyed joins: candidates are pre-filtered ~12×, so the pair
-    exchange is tens of MB, and the per-partition hash builds run in
-    PARALLEL — A/B-measured faster AND far more stable than the earlier
-    broadcast-hash rescore (min 4.7 s vs 5.8 s at 1M×dim32, spread
-    4.7–5.7 vs 5.8–14 s: the 1M-row broadcast relation's build is
-    driver-serial and was the stage's main noise source). The build
-    side is the uniformly-id-keyed vector table, so per-partition build
-    size is total/partitions — bounded by shuffle parallelism, the
-    standard cluster-safe SHJ shape. Past the gate the joins are left
-    un-hinted for the planner to choose from runtime sizes.
+    One plan at every input size. Candidates are pre-filtered by the
+    projection bound (below) before any exchange, and the vectors are
+    attached with SHUFFLE_HASH-hinted id-keyed joins: the per-partition
+    hash builds run in PARALLEL — A/B-measured faster AND far more
+    stable than a broadcast-hash rescore (min 4.7 s vs 5.8 s at
+    1M×dim32, spread 4.7–5.7 vs 5.8–14 s: the 1M-row broadcast
+    relation's build is driver-serial). The build side is the
+    uniformly-id-keyed vector table, so per-partition build size is
+    total/partitions — bounded by shuffle parallelism, the standard
+    cluster-safe SHJ shape.
+
+    Degenerate vectors (zero or NaN norm) have no defined cosine and
+    produce no pairs; neither does a pair whose cosine overflows to NaN
+    (e.g. two ``[1e300]*8`` vectors, whose norms are infinite).
 
     ``signatures`` accepts a precomputed (ideally cached)
     :func:`embedding_signatures` frame with matching parameters."""
-    import math
-
     sig = (
         signatures
         if signatures is not None
         else embedding_signatures(df, id_col, vec_col, n_planes, dim, n_tables)
     )
-    if compact_rescore is None:
-        # gate on the optimizer's size ESTIMATE instead of a count() job:
-        # the auto-decision previously ran one full count per invocation
-        # (3 parquet scans per bench run) just to pick a plan shape. Both
-        # shapes are value-identical (proven by exceptAll at 1M×dim32),
-        # so a conservative estimate is safe — file-sized for a parquet
-        # scan, row-count-derived for in-memory frames. Default 256 MB of
-        # estimated input ≈ 4M vectors at dim 32 float32 parquet; at
-        # 10^9 vectors the estimate is far over and the planner-choice
-        # fallback kicks in.
-        bcast_max = int(os.environ.get("SPARK_GRAFT_NEARDUP_BCAST_MAX_BYTES",
-                                       str(256 * 1024 * 1024)))
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        compact_rescore = est_bytes <= bcast_max
     # Provably-safe projection pre-filter (r6): for unit-normalized
     # vectors â = a/|a|, cos(a,b) ≥ θ  ⇒  |â − b̂| = √(2−2cos) ≤ √(2−2θ),
-    # and every coordinate satisfies |â_i − b̂_i| ≤ |â − b̂|. Carrying the
-    # first m normalized coordinates into the bucket rows lets pair
-    # expansion discard, MAP-SIDE and before any exchange, every pair
+    # and every coordinate satisfies |â_i − b̂_i| ≤ |â − b̂|. The signature
+    # rows carry the first m normalized coordinates (``_pf``), so pair
+    # expansion discards, MAP-SIDE and before any exchange, every pair
     # that provably cannot reach the threshold — a necessary condition,
     # never a heuristic, so the output set is unchanged (recall 1.0 by
     # construction; float error is ~1e-14 against a 1e-6 safety margin).
     # Measured at 1M×dim32/θ=0.99: candidates 16.6M → 1.37M (12×), the
-    # distinct and rescore shrinking with them. Degenerate vectors
-    # (zero or non-finite norm) have no defined cosine and produce NO
-    # pairs on EITHER plan path: the projection is null-gated on a
-    # valid norm (null payload fails the bound filter) and the rescore
-    # division is guarded the same way — under this repo's ANSI config
-    # a bare 0/0 would RAISE, and Spark orders NaN above every double,
-    # so the unguarded forms would crash or pass the threshold rather
-    # than "fail the filter" (r6 review fix; a valid-norm guard, not a
-    # behavior the old code actually had). Applied when the projection
-    # frame is broadcastable (the compact gate); otherwise the plan
-    # falls back to the unfiltered expansion.
-    m = min(4, dim)
+    # distinct and rescore shrinking with them. ``_pf`` is null for a
+    # degenerate vector, and a null payload fails the gap.
     bound = math.sqrt(max(0.0, 2.0 - 2.0 * threshold)) + 1e-6
-
-    def _valid_norm(n: Column) -> Column:
-        return (n > 0) & ~F.isnan(n)
-
-    payload_col = None
-    pair_filter = None
-    keyed = sig
-    if compact_rescore and m > 0 and bound < 2.0:
-        v = F.col(vec_col)
-        pf = df.select(
-            F.col(id_col).alias("_pid"),
-            F.when(
-                _valid_norm(norm(v)),
-                F.array(
-                    *[(F.get(v, i).cast("double") / norm(v))
-                      for i in range(m)]
-                ),
-            ).alias("_pf"),
-        )
-        keyed = sig.join(F.broadcast(pf), on=F.col("_id") == F.col("_pid"))
-        payload_col = "_pf"
-
-        def pair_filter(pa, pb):  # noqa: ANN001
-            c = F.lit(True)
-            for i in range(m):
-                c = c & (F.abs(F.get(pa, i) - F.get(pb, i)) <= F.lit(bound))
-            return c
-
     # distinct=True is deliberate even though the rescore would collapse
     # duplicates after the filter: the candidate distinct's exchange is
     # what re-spreads the (byte-small, work-heavy) pair stream across the
@@ -562,20 +535,16 @@ def embedding_neardup_pairs(
     # coalesces the groupBy output by SHUFFLE bytes and the fused
     # explode+rescore then runs on too few tasks (only ~2% of candidates
     # are cross-table duplicates, so the dedup saves nothing here).
-    cand = bucket_pairs(keyed, ("_table", "_sig"), id_col="_id",
-                        max_bucket=max_bucket, payload_col=payload_col,
-                        pair_filter=pair_filter)
+    cand = bucket_pairs(sig, ("_table", "_sig"), id_col="_id",
+                        max_bucket=max_bucket, payload_col="_pf",
+                        max_payload_gap=bound)
     # per-vector norm computed ONCE per vector (same float chain as the
     # pair-wise cosine, so oracle values are unchanged)
     vecs = df.select(
         F.col(id_col).alias("_vid"),
         F.col(vec_col).alias("_vv"),
         norm(F.col(vec_col)).alias("_vn"),
-    )
-    if compact_rescore:
-        # parallel per-partition hash builds; see docstring for the A/B
-        # against the broadcast-hash rescore
-        vecs = vecs.hint("SHUFFLE_HASH")
+    ).hint("SHUFFLE_HASH")
     return (
         cand.join(vecs, on=F.col("id_a") == F.col("_vid"))
         .select("id_a", "id_b", F.col("_vv").alias("_va"),
@@ -583,15 +552,16 @@ def embedding_neardup_pairs(
         .join(vecs, on=F.col("id_b") == F.col("_vid"))
         .withColumn(
             "cosine_sim",
-            # valid-norm guard (matches the projection gate above):
-            # degenerate vectors yield null → dropped by the filter
-            # instead of an ANSI DIVIDE_BY_ZERO / NaN-passes-threshold
+            # valid-norm guard: a degenerate vector yields null (dropped
+            # by the filter) instead of an ANSI DIVIDE_BY_ZERO
             F.when(
                 _valid_norm(F.col("_na")) & _valid_norm(F.col("_vn")),
                 dot(F.col("_va"), F.col("_vv"))
                 / (F.col("_na") * F.col("_vn")),
             ),
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        # Spark orders NaN above every double, so an overflowed cosine
+        # (inf/inf) would pass any threshold without the isnan term
+        .filter((F.col("cosine_sim") >= threshold) & ~F.isnan("cosine_sim"))
         .select("id_a", "id_b", "cosine_sim")
     )

@@ -53,6 +53,16 @@ def token_count_bpe_ish(text: str | Column) -> Column:
     )
 
 
+def _temp_col(df: DataFrame, base: str) -> str:
+    """A column name not already in ``df`` (Spark resolves names
+    case-insensitively), so a bound temp never overwrites user data."""
+    taken = {c.lower() for c in df.columns}
+    name = base
+    while name.lower() in taken:
+        name = "_" + name
+    return name
+
+
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / word-shape / stopword-ratio quality features.
 
@@ -62,8 +72,9 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     four times per row (CollapseProject keeps the binding because the
     alias is referenced more than once and a split is not cheap).
     Values unchanged."""
-    base = df.withColumn("_w_qf", words(text_col))
-    w = F.col("_w_qf")
+    tmp = _temp_col(df, "_w_qf")
+    base = df.withColumn(tmp, words(text_col))
+    w = F.col(tmp)
     n_words = F.size(w)
     n_chars = F.length(text_col)
     stop_hits = F.size(F.filter(w, lambda x: x.isin(*STOPWORDS)))
@@ -74,7 +85,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
             "stopword_ratio": stop_hits / n_words,
             "uniq_word_ratio": F.size(F.array_distinct(w)) / n_words,
         }
-    ).drop("_w_qf")
+    ).drop(tmp)
 
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -93,14 +104,15 @@ def lang_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     marker hits). N-gram-frequency language ID reduced to its word-marker
     form — the Spark plan (HOF filter + greatest/argmax) is identical for
     richer marker tables."""
-    base = df.withColumn("_w_ls", words(text_col))
-    w = F.col("_w_ls")  # bound once — same CSE rationale as quality_features
+    tmp = _temp_col(df, "_w_ls")
+    base = df.withColumn(tmp, words(text_col))
+    w = F.col(tmp)  # bound once — same CSE rationale as quality_features
     n = F.size(w)
     cols = {}
     for lang, markers in LANG_MARKERS.items():
         hits = F.size(F.filter(w, lambda x: x.isin(*markers)))
         cols[f"score_{lang}"] = hits / n
-    out = base.withColumns(cols).drop("_w_ls")
+    out = base.withColumns(cols).drop(tmp)
     best = None
     for lang in LANG_MARKERS:
         s = F.col(f"score_{lang}")

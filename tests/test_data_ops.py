@@ -137,6 +137,24 @@ def test_text_stats_and_langid(spark):
     assert langs[3] == "und"  # no markers
 
 
+def test_text_features_keep_user_temp_named_columns(spark):
+    """quality_features / lang_scores bind the split words to a temp
+    column; a user column that happens to share its name (in any case)
+    must come through untouched, and the features must not change."""
+    from etna_spark.data.text import quality_features
+
+    docs = _docs(spark).withColumns({"_w_qf": F.col("doc_id") * 10,
+                                     "_W_LS": F.lit("keep")})
+    qf = quality_features(docs).orderBy("doc_id").collect()
+    assert [r["_w_qf"] for r in qf] == [10, 20, 30, 40, 50]
+    assert qf[0]["n_words"] == 9
+    assert qf[0]["stopword_ratio"] == pytest.approx(2 / 9)
+    ls = lang_scores(docs).orderBy("doc_id").collect()
+    assert [r["_W_LS"] for r in ls] == ["keep"] * 5
+    assert [r["_w_qf"] for r in ls] == [10, 20, 30, 40, 50]
+    assert ls[0]["lang_pred"] == "en" and ls[4]["lang_pred"] == "de"
+
+
 def test_token_count_bpe_ish(spark):
     df = spark.createDataFrame(
         [(1, "short words here"), (2, "extraordinarily long terminology")],
@@ -239,6 +257,29 @@ def test_embedding_neardup_hot_bucket_cap(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in out}
     assert (1000, 1001) in pairs  # small bucket survives
     assert all(a >= 1000 for a, _ in pairs)  # 300-clone bucket dropped entirely
+
+
+def test_embedding_neardup_degenerate_vectors(spark, tmp_path):
+    """Zero-norm vectors, norms that overflow to inf and a duplicated id
+    give no pairs — never a NaN cosine (Spark orders NaN above every
+    threshold), never an (x, x) pair — for in-memory and parquet-read
+    input alike."""
+    a = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0]
+    b = [0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0]
+    rows = [
+        (0, [0.0] * 8), (1, [0.0] * 8),        # zero norm: no cosine
+        (2, [1e300] * 8), (3, [1e300] * 8),    # inf norms: inf/inf = NaN
+        (4, a), (4, a),                        # duplicated id
+        (5, b), (6, [x * 1.0001 for x in b]),  # the one real pair
+    ]
+    mem = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    mem.write.parquet(str(tmp_path / "emb"))
+    disk = spark.read.parquet(str(tmp_path / "emb"))
+    for emb in (mem, disk):
+        out = embedding_neardup_pairs(emb, threshold=0.9, n_planes=4,
+                                      dim=8).collect()
+        assert [(r["id_a"], r["id_b"]) for r in out] == [(5, 6)]
+        assert out[0]["cosine_sim"] == pytest.approx(1.0)
 
 
 def test_multimodal_features(spark):
@@ -623,11 +664,21 @@ def test_contamination_and_novelty_handcrafted(spark):
 
 def test_embedding_signature_backends_bit_identical(spark):
     """The Arrow signature kernel must produce EXACTLY the signatures of
-    the JVM expression path (same LCG weights, same left-to-right float64
-    fold) — adversarial vectors included (zeros, huge/tiny magnitudes,
-    sign-boundary-hunting values from a hash recipe)."""
-    from etna_spark.data.similarity import embedding_signatures
+    the JVM expression chain (``lsh_signature`` per table: same mixed-hash
+    weights, same left-to-right float64 fold) and EXACTLY the pre-filter
+    projection ``v_i / norm(v)`` under the valid-norm guard — adversarial
+    vectors included (zeros, huge/tiny magnitudes, sign-boundary-hunting
+    values from a hash recipe)."""
+    import struct
 
+    from etna_spark.data.similarity import (
+        _valid_norm,
+        embedding_signatures,
+        lsh_signature,
+        norm,
+    )
+
+    n_planes, dim, n_tables = 11, 16, 3
     df = spark.range(0, 500).select(
         F.col("id").alias("vec_id"),
         F.expr(
@@ -639,16 +690,40 @@ def test_embedding_signature_backends_bit_identical(spark):
             "      power(10.0, pmod(xxhash64(id, j, 7), 13) - 6) END)"
         ).alias("embedding"),
     )
-    kw = dict(id_col="vec_id", vec_col="embedding",
-              n_planes=11, dim=16, n_tables=3)
-    arrow = sorted(
-        embedding_signatures(df, backend="arrow", **kw).collect())
-    expr = sorted(
-        embedding_signatures(df, backend="expr", **kw).collect())
-    assert arrow == expr
-    import pytest as _pt
-    with _pt.raises(ValueError, match="backend"):
-        embedding_signatures(df, backend="nope", **kw).collect()
+    got = embedding_signatures(df, id_col="vec_id", vec_col="embedding",
+                               n_planes=n_planes, dim=dim, n_tables=n_tables)
+    assert got.columns == ["_id", "_pf", "_table", "_sig"]
+
+    v = F.col("embedding")
+    tables = F.array(*[
+        lsh_signature(v, n_planes, dim, plane_offset=t * n_planes)
+        for t in range(n_tables)
+    ])
+    ref_sig = df.select(F.col("vec_id").alias("_id"), v).select(
+        "_id", F.posexplode(tables).alias("_table", "_sig"))
+    assert (sorted(got.select("_id", "_table", "_sig").collect())
+            == sorted(ref_sig.collect()))
+
+    ref_pf = df.select(
+        F.col("vec_id").alias("_id"),
+        F.when(_valid_norm(norm(v)), F.array(*[
+            F.get(v, i).cast("double") / norm(v) for i in range(4)
+        ])).alias("_pf"),
+    )
+
+    def bits(rows):
+        # compare IEEE bit patterns: float == would conflate 0.0/-0.0
+        return {
+            r["_id"]: None if r["_pf"] is None else tuple(
+                struct.unpack("<q", struct.pack("<d", x))[0] for x in r["_pf"])
+            for r in rows
+        }
+
+    got_pf = bits(got.where(F.col("_table") == 0).collect())
+    want_pf = bits(ref_pf.collect())
+    assert got_pf == want_pf
+    assert got_pf[0] is None and got_pf[2] is None  # zero / underflowed norm
+    assert got_pf[1] == (0, 0, 0, 0)  # 1e300 / inf = +0.0 (bit pattern 0)
 
 
 _SPAN_DOCS = [

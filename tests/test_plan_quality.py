@@ -4,6 +4,9 @@ joins, map-side partial aggregation, no Python in native paths)."""
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 from pyspark.sql import functions as F
 
 from etna_spark.operators.rollup import rollup
@@ -13,9 +16,10 @@ from .conftest import SF_SMALL
 
 
 def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
 
 
 def test_filter_pushdown_reaches_parquet(spark):
@@ -193,7 +197,9 @@ def test_embedding_neardup_candidates_are_equi_join(spark):
     (similarity.py::_sig_kernel — bit-identical to the expression chain,
     pinned by test_embedding_signature_backends_bit_identical), so the
     plan may contain exactly one ArrowEvalPython and no row-at-a-time
-    BatchEvalPython."""
+    BatchEvalPython. The kernel also emits the pre-filter projection, so
+    no broadcast join attaches it, and the vector-attach joins are the
+    SHUFFLE_HASH-hinted shape even for a tiny in-memory frame."""
     from etna_spark.data.similarity import embedding_neardup_pairs
 
     emb = spark.createDataFrame(
@@ -204,6 +210,10 @@ def test_embedding_neardup_candidates_are_equi_join(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
+    # formatted plans print each node twice (tree line + detail section)
+    assert plan.count("ArrowEvalPython") == 2
+    assert "BroadcastExchange" not in plan
+    assert "ShuffledHashJoin" in plan
 
 
 def test_hierarchy_multihop_is_single_broadcast_join(spark):
