@@ -88,8 +88,9 @@ def row_partials(
     sum_is_exact: bool = True,
 ) -> DataFrame:
     """Each raw row as a one-row aggregate in the tier schema, with the
-    types :func:`rollup` gives, so ``rollup_cascade(row_partials(df, t), t)``
-    ≡ ``rollup(df, t)``. Raw rows and existing tier rows then merge in one
+    types :func:`rollup` gives, so
+    ``merge_partials(row_partials(df, t), [*series_cols, "bucket_ts"])`` ≡
+    ``rollup(df, t)``. Raw rows and existing tier rows then merge in one
     aggregation (one shuffle) instead of a rollup followed by a merge."""
     v = F.col(value_col)
     wide = v.cast("long") if sum_is_exact else v
@@ -104,26 +105,30 @@ def row_partials(
     )
 
 
+def merge_partials(df: DataFrame, keys: Sequence[str | Column]) -> DataFrame:
+    """Merge rows of the tier schema that share ``keys`` into one.
+
+    Valid because all materialized aggregates are algebraic:
+    count = Σ count, sum = Σ sum, min = min(min), max = max(max),
+    sumsq = Σ sumsq.
+    """
+    return df.groupBy(*keys).agg(
+        F.sum("point_count").alias("point_count"),
+        F.sum("value_sum").alias("value_sum"),
+        F.min("value_min").alias("value_min"),
+        F.max("value_max").alias("value_max"),
+        F.sum("value_sumsq").alias("value_sumsq"),
+    )
+
+
 def rollup_cascade(
     tier_df: DataFrame,
     to_tier: str,
     series_cols: Sequence[str] = ("source",),
 ) -> DataFrame:
-    """Derive a coarser tier from a finer one (1m→1h, 1h→1d).
-
-    Valid because all materialized aggregates are algebraic:
-    count = Σ count, sum = Σ sum, min = min(min), max = max(max).
-    """
-    return (
-        tier_df.groupBy(*series_cols, bucket("bucket_ts", to_tier).alias("bucket_ts"))
-        .agg(
-            F.sum("point_count").alias("point_count"),
-            F.sum("value_sum").alias("value_sum"),
-            F.min("value_min").alias("value_min"),
-            F.max("value_max").alias("value_max"),
-            F.sum("value_sumsq").alias("value_sumsq"),
-        )
-    )
+    """Derive a coarser tier from a finer one (1m→1h, 1h→1d)."""
+    return merge_partials(
+        tier_df, [*series_cols, bucket("bucket_ts", to_tier).alias("bucket_ts")])
 
 
 def rollup_salted(
@@ -149,13 +154,4 @@ def rollup_salted(
         salted.groupBy(*series_cols, bucket(ts_col, tier).alias("bucket_ts"), "_salt")
         .agg(*_agg_exprs(value_col, sum_is_exact))
     )
-    return (
-        phase1.groupBy(*series_cols, "bucket_ts")
-        .agg(
-            F.sum("point_count").alias("point_count"),
-            F.sum("value_sum").alias("value_sum"),
-            F.min("value_min").alias("value_min"),
-            F.max("value_max").alias("value_max"),
-            F.sum("value_sumsq").alias("value_sumsq"),
-        )
-    )
+    return merge_partials(phase1, [*series_cols, "bucket_ts"])

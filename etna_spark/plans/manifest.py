@@ -9,13 +9,16 @@ snapshot, committed in the same log swap as the data.
 
 Records:
 - ``watermark``: {tier, input_snapshot_id} — an observability copy of the
-  checkpoint, written after the tier commit. Refresh never reads it.
-- ``lineage``: one per (run, tier, partition): rows_in, points_out,
+  checkpoint (an input-table snapshot id for every tier), written after the
+  tier commit. Refresh never reads it.
+- ``lineage``: one per (run, tier, partition): rows_in (input rows for
+  1m, the finer tier's points_out for 1h/1d), points_out,
   wall_time_sec, checksum (order-insensitive: the sum over the partition's
   rows of ``pmod(xxhash64(series, bucket_ts, value_sum, point_count),
   1e9+7)`` — cheap verifiable fingerprint).
-- ``metrics``: per run and tier: totals, wall time of the whole commit and
-  the number of Spark jobs it ran.
+- ``metrics``: per run and tier: totals, plus the refresh's wall time up
+  to its log swaps and the number of Spark jobs it ran (one refresh
+  commits every tier, so its tiers' records share these and the run id).
 
 The reference has no equivalent (its 'state' is fitted transform objects,
 SURVEY.md §3.2); this is the lakehouse analogue.

@@ -9,8 +9,10 @@ SNAPSHOT CONTRACT the engine needs and implements it over plain parquet:
 - ``read(table, snapshot_id)`` sees exactly the files of snapshots ≤ id;
 - ``read_delta(table, after_id, until_id)`` sees only files appended in
   (after_id, until_id] — the incremental-refresh input;
-- ``overwrite_partitions`` atomically replaces the files of a partition
-  subset (the tier-refresh MERGE target);
+- ``stage_partitioned`` writes a DataFrame with one ``partitionBy`` job
+  without committing it, and ``overwrite_partitions`` atomically replaces
+  the files of a partition subset with staged ones (the tier-refresh MERGE
+  target: one staged write can feed several tables);
 - ``partitions()`` and ``read(..., partitions=...)`` list and prune by the
   recorded file → partition map, so a refresh opens only the files of the
   days it touches.
@@ -41,11 +43,11 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass, replace
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -119,34 +121,26 @@ class ParquetSnapshotTable:
             if f.endswith(".parquet")
         ]
 
-    def _stage_partitioned(self, df: DataFrame, partition_col: str) -> dict[str, str]:
-        """Write df with one ``partitionBy`` job into an immutable staging
-        dir, move the files up out of the ``<col>=<value>`` directories so
-        the layout stays flat (``data-<uuid>/*.parquet``: compaction and
-        storage walks look one level deep), and return relative file path
-        -> partition value (read from the directory names).
+    def stage_partitioned(self, df: DataFrame, partition_cols: Sequence[str]) -> str:
+        """Write ``df`` with ONE ``partitionBy(*partition_cols)`` job into a
+        fresh staging dir ``data-<uuid>`` of this table's root and return its
+        path, laid out ``<c1>=<v1>/<c2>=<v2>/...`` (the partition columns are
+        not in the files). Nothing is committed: a nested staging dir is
+        handed to ``take_staged`` + ``overwrite_partitions`` of the table it
+        belongs to, and one left behind by a kill holds no live file, so
+        ``compact_files`` removes it whole."""
+        out_dir = os.path.join(self.root, f"data-{uuid.uuid4().hex}")
+        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(out_dir)
+        return out_dir
 
-        The write partitions by a copy of ``partition_col``: ``partitionBy``
-        drops its column from the data files, and the files must keep it."""
+    def take_staged(self, path: str) -> str:
+        """Move a staged dir of ``<col>=<value>`` partition subdirs (one
+        level of a ``stage_partitioned`` output, possibly another table's)
+        into this table's root as a fresh ``data-<uuid>`` dir; returns its
+        name. One rename, no commit."""
         stage = f"data-{uuid.uuid4().hex}"
-        out_dir = os.path.join(self.root, stage)
-        by = f"__{partition_col}"
-        (df.withColumn(by, F.col(partition_col))
-         .write.mode("overwrite").partitionBy(by).parquet(out_dir))
-        file_parts: dict[str, str] = {}
-        for i, d in enumerate(sorted(os.listdir(out_dir))):
-            sub = os.path.join(out_dir, d)
-            if not os.path.isdir(sub):
-                continue
-            value = unquote(d.split("=", 1)[1])  # Spark %XX-escapes paths
-            for f in sorted(os.listdir(sub)):
-                if f.endswith(".parquet"):
-                    # each partition dir restarts the task file names
-                    rel = os.path.join(stage, f"p{i}-{f}")
-                    os.rename(os.path.join(sub, f), os.path.join(self.root, rel))
-                    file_parts[rel] = value
-            shutil.rmtree(sub)
-        return file_parts
+        os.rename(path, os.path.join(self.root, stage))
+        return stage
 
     def append(self, df: DataFrame, properties: dict | None = None) -> int:
         """Append rows as a new snapshot; returns its id."""
@@ -202,23 +196,41 @@ class ParquetSnapshotTable:
     # -- partition-scoped overwrite (tier tables) ------------------------------
 
     def overwrite_partitions(
-        self, df: DataFrame, partition_col: str, partition_values: list,
+        self, stage: str, partition_values: list, schema: StructType,
         properties: dict | None = None,
     ) -> int:
-        """Replace all rows of the named partitions with ``df`` (which must
-        contain only those partitions). Files of other partitions are kept.
-        Maps to Iceberg ``overwritePartitions()``.
+        """Replace all rows of the named partitions with the files staged in
+        ``stage`` (a ``take_staged`` dir of this table: one ``<col>=<value>``
+        subdir per partition, each holding the files of that partition, whose
+        rows have ``schema``). Files of other partitions are kept. Maps to
+        Iceberg ``overwritePartitions()``.
 
-        ``df`` is written by ONE ``partitionBy`` job, so every file holds
-        exactly one partition value and the file → partition map comes from
-        the output directory names, with no extra Spark job. Retention and
-        later overwrites retire whole files, never rewrite them."""
-        file_parts = self._stage_partitioned(df, partition_col)
+        No Spark job runs here: the files are moved up out of their
+        partition subdirs, so the layout stays flat (``data-<uuid>/*.parquet``:
+        compaction and storage walks look one level deep), the file →
+        partition map comes from the subdir names, and the snapshot-log swap
+        commits them. Every file holds exactly one partition value, so
+        retention and later overwrites retire whole files, never rewrite
+        them. A staged partition not named raises ``ValueError`` and
+        commits nothing (the staged files stay orphans for
+        ``compact_files``)."""
+        file_parts: dict[str, str] = {}
+        out_dir = os.path.join(self.root, stage)
+        for i, d in enumerate(sorted(os.listdir(out_dir))):
+            sub = os.path.join(out_dir, d)
+            if not os.path.isdir(sub):
+                continue
+            value = unquote(d.split("=", 1)[1])  # Spark %XX-escapes paths
+            for f in sorted(os.listdir(sub)):
+                if f.endswith(".parquet"):
+                    # each partition dir restarts the task file names
+                    rel = os.path.join(stage, f"p{i}-{f}")
+                    os.rename(os.path.join(sub, f), os.path.join(self.root, rel))
+                    file_parts[rel] = value
+            shutil.rmtree(sub)
         wanted = set(map(str, partition_values))
         stray = set(file_parts.values()) - wanted
         if stray:
-            # nothing is committed: the staged files stay orphans for
-            # compact_files
             raise ValueError(f"rows outside the named partitions: {sorted(stray)}")
         snaps = self.snapshots()
         retired = {f for f, parts in self._partition_map().items() if parts & wanted}
@@ -228,13 +240,13 @@ class ParquetSnapshotTable:
         # references
         self._set_partition_map_entries(file_parts)
         return self._commit(kept_snaps, sorted(file_parts), properties,
-                            df.schema.jsonValue())
+                            schema.jsonValue())
 
     @staticmethod
     def _retire(snaps: list[Snapshot], retired: set[str]) -> list[Snapshot]:
         """``snaps`` without the ``retired`` files. Everything else stays:
         latest_property() walks the whole log, so dropping historical
-        properties would erase the tier watermark that _refresh_tier reads
+        properties would erase the tier watermark that refresh reads
         (double-apply hazard after retention), and reads take the schema
         from the newest snapshot that recorded one."""
         return [replace(s, files=[f for f in s.files if f not in retired])

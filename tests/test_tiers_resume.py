@@ -1,9 +1,10 @@
 """Tier engine tests (FIXTURES.md §B5): incremental refresh ≡ full
-recompute, rerun-after-kill is a no-op, retention drops partitions,
-token-array invariance through the pipeline, and the commit path's shape:
-a bounded number of Spark jobs per tier, one write per tier, lineage equal
-to the committed files, one partition per file, orphaned staging dirs
-ignored and compacted."""
+recompute, rerun-after-kill is a no-op, retention drops partitions and
+never loses data of a coarser tier, token-array invariance through the
+pipeline, and the commit path's shape: a bounded number of Spark jobs per
+refresh, one write per refresh, lineage equal to the committed files, one
+partition per file, orphaned staging dirs ignored and compacted, and a
+kill between two tiers' log swaps resumed exactly."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from pyspark.sql.readwriter import DataFrameWriter
 
 from etna_spark.operators.rollup import rollup
 from etna_spark.plans.tiers import TierEngine
+from etna_spark.sources.catalog import ParquetSnapshotTable
 from etna_spark.synth import token_table
 
 
@@ -229,8 +231,9 @@ def _newest_metrics(eng) -> dict[str, dict]:
 
 def test_incremental_refresh_job_budget(spark, tokens_df, tmp_path):
     """After a seed refresh, a one-day append + refresh runs at most 4 Spark
-    jobs per tier (the manifest's count) and at most 12 in all (counted here
-    in a job group of the test's own)."""
+    jobs in all (counted here in a job group of the test's own), and every
+    tier's metrics record carries the refresh's shared run id, job count
+    and wall time."""
     eng = TierEngine(str(tmp_path / "wh"))
     eng.input.append(tokens_df)
     eng.refresh(spark)
@@ -248,11 +251,14 @@ def test_incremental_refresh_job_budget(spark, tokens_df, tmp_path):
 
     assert all(r[t]["partitions"] == ["2026-01-02"] for t in TIERS)
     metrics = _newest_metrics(eng)
-    per_tier = {t: metrics[t]["spark_jobs"] for t in TIERS}
-    assert all(1 <= n <= 4 for n in per_tier.values()), per_tier
-    assert sum(per_tier.values()) <= total <= 12, (per_tier, total)
-    # wall time covers the whole commit, lineage included
-    assert all(metrics[t]["wall_time_sec"] > 0 for t in TIERS)
+    shared = {(metrics[t]["run_id"], metrics[t]["spark_jobs"],
+               metrics[t]["wall_time_sec"]) for t in TIERS}
+    assert len(shared) == 1, shared
+    ((run_id, jobs, wall),) = shared
+    assert run_id == r["1m"]["run_id"]
+    assert 1 <= jobs <= total <= 4, (jobs, total)
+    # wall time covers the whole refresh up to the commits
+    assert wall > 0
 
 
 def test_lineage_matches_committed_files(spark, tokens_df, tmp_path):
@@ -355,8 +361,8 @@ def test_killed_partitioned_write_ignored_and_compacted(spark, tokens_df, tmp_pa
 
 
 def test_seven_day_input_one_write_per_tier(spark, tmp_path, monkeypatch):
-    """A refresh over a 7-day input commits each tier with one parquet
-    write (not one per day) and stays within the per-tier job budget."""
+    """A refresh over a 7-day input commits every tier from one parquet
+    write (not one per tier or day) within the refresh's job budget."""
     week = token_table(spark, 3000, with_tokens=False, window_seconds=7 * 86400)
     eng = TierEngine(str(tmp_path / "wh"))
     eng.input.append(week)
@@ -372,7 +378,7 @@ def test_seven_day_input_one_write_per_tier(spark, tmp_path, monkeypatch):
     r = eng.refresh(spark)
     monkeypatch.undo()
 
-    assert len(writes) == len(TIERS)
+    assert len(writes) == 1
     metrics = _newest_metrics(eng)
     for tier in TIERS:
         assert len(r[tier]["partitions"]) == 7
@@ -401,3 +407,133 @@ def test_null_values_merge_like_rollup(spark, tokens_df, tmp_path):
     rows_in = sum(r["rows_in"] for r in eng.manifest.records()
                   if r["kind"] == "lineage" and r["tier"] == "1m")
     assert rows_in == tokens_df.count()
+
+
+def _direct(df, tier):
+    return rollup(df, tier).withColumn(
+        "part_day", F.date_format("bucket_ts", "yyyy-MM-dd"))
+
+
+def test_late_row_after_retention(spark, tokens_df, tmp_path):
+    """A late row for a day the 1m tier has already expired: 1h and 1d
+    merge it into their own rows of that day, so they still equal a direct
+    rollup of all input."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    assert eng.expire("1m", keep_days=1, now_day="2026-01-03") == ["2026-01-01"]
+    late = (tokens_df.limit(1)
+            .withColumn("doc_id", F.lit("late_0"))
+            .withColumn("event_ts",
+                        F.lit("2026-01-01 07:00:00").cast(tokens_df.schema["event_ts"].dataType)))
+    eng.input.append(late)
+    r = eng.refresh(spark)
+    assert all(r[t]["partitions"] == ["2026-01-01"] for t in TIERS)
+    everything = tokens_df.unionByName(late)
+    for tier in ("1h", "1d"):
+        direct = _direct(everything, tier)
+        assert _tiers_equal(eng.tier_df(spark, tier).select(*direct.columns), direct), tier
+
+
+def _newest_lineage(eng) -> dict[tuple[str, str], tuple]:
+    """Newest lineage per (tier, partition); 1m's rows_in counts only the
+    delta a commit read, so it is left out."""
+    out = {}
+    for r in eng.manifest.records():
+        if r["kind"] == "lineage":
+            rows_in = None if r["tier"] == "1m" else r["rows_in"]
+            out[(r["tier"], r["partition"])] = (
+                rows_in, r["points_out"], r["checksum"])
+    return out
+
+
+def test_kill_between_log_swaps_resumes(spark, tokens_df, tmp_path, monkeypatch):
+    """A kill after the 1m swap, in the 1h swap, leaves 1h/1d at the old
+    watermark. The rerun refreshes only 1h/1d, each from its own delta,
+    with no double count: every tier and its newest lineage equal a clean
+    engine's."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    extra = _one_day_extra(spark, "s_", "2026-01-02")
+    cur = eng.input.append(extra)
+
+    def killed(snaps):
+        raise RuntimeError("killed in the 1h log swap")
+
+    monkeypatch.setattr(eng.tiers["1h"], "_write_log", killed)
+    with pytest.raises(RuntimeError):
+        eng.refresh(spark)
+    monkeypatch.undo()
+    wms = {t: eng.tiers[t].latest_property("input_snapshot_id") for t in TIERS}
+    assert wms["1m"] == cur and wms["1h"] == wms["1d"] < cur
+
+    r = eng.refresh(spark)
+    assert r["1m"]["skipped"] and not r["1h"]["skipped"] and not r["1d"]["skipped"]
+    assert all(eng.refresh(spark)[t]["skipped"] for t in TIERS)
+
+    clean = TierEngine(str(tmp_path / "clean"))
+    clean.input.append(tokens_df)
+    clean.input.append(extra)
+    clean.refresh(spark)
+    for tier in TIERS:
+        assert _tiers_equal(eng.tier_df(spark, tier), clean.tier_df(spark, tier)), tier
+    assert _newest_lineage(eng) == _newest_lineage(clean)
+
+
+def test_write_killed_before_move_compacted(spark, tokens_df, tmp_path, monkeypatch):
+    """A refresh killed after its Spark write, before any file moved into a
+    tier table, leaves only a staging dir in the 1m table, which reads
+    ignore and ``compact_files`` removes; the rerun equals a clean engine."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    extra = _one_day_extra(spark, "m_", "2026-01-03")
+    eng.input.append(extra)
+    before = {t: set(os.listdir(eng.tiers[t].root)) for t in TIERS}
+
+    def killed(self, path):
+        raise RuntimeError("killed before the move")
+
+    monkeypatch.setattr(ParquetSnapshotTable, "take_staged", killed)
+    with pytest.raises(RuntimeError):
+        eng.refresh(spark)
+    monkeypatch.undo()
+    t1m = eng.tiers["1m"]
+    (staged,) = set(os.listdir(t1m.root)) - before["1m"]
+    assert staged.startswith("data-")
+    for tier in ("1h", "1d"):
+        assert set(os.listdir(eng.tiers[tier].root)) == before[tier]
+    t1m.compact_files()
+    assert set(os.listdir(t1m.root)) == before["1m"]
+
+    eng.refresh(spark)
+    clean = TierEngine(str(tmp_path / "clean"))
+    clean.input.append(tokens_df)
+    clean.input.append(extra)
+    clean.refresh(spark)
+    for tier in TIERS:
+        assert _tiers_equal(eng.tier_df(spark, tier), clean.tier_df(spark, tier)), tier
+
+
+def test_expire_leaves_only_live_files(spark, tokens_df, tmp_path):
+    """After refresh + expire cycles, every tier root holds exactly the
+    parquet files its snapshot log references: files that overwrites
+    retired from 1h/1d are deleted too, not only those of the expired
+    tier."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(tokens_df)
+    eng.refresh(spark)
+    for i, day in enumerate(("2026-01-02", "2026-01-03")):
+        eng.input.append(_one_day_extra(spark, f"e{i}_", day))
+        eng.refresh(spark)
+        eng.expire("1m", keep_days=1, now_day=day)
+    for tier in TIERS:
+        table = eng.tiers[tier]
+        live = {f for s in table.snapshots() for f in s.files}
+        on_disk = {
+            os.path.relpath(os.path.join(d, f), table.root)
+            for d, _, files in os.walk(table.root) for f in files
+            if f.endswith(".parquet")
+        }
+        assert live and on_disk == live, (tier, sorted(on_disk - live))
