@@ -149,7 +149,8 @@ def _sig_kernel(n_planes: int, dim: int, n_tables: int):
     norm(v)`` with the norm folded left to right in index order exactly
     as :func:`norm` does, and null wherever :func:`_valid_norm` fails
     (an infinite norm still gives ``v_i / inf``). Both outputs are
-    pinned to their Spark-expression twins by a property test."""
+    pinned to their Spark-expression twins by a property test. A null
+    vector gets a null ``sig`` and ``pf``."""
     total = n_tables * n_planes
     m = min(4, dim)
     weights = np.array(
@@ -161,8 +162,14 @@ def _sig_kernel(n_planes: int, dim: int, n_tables: int):
         StructField("sig", ArrayType(LongType())),
         StructField("pf", ArrayType(DoubleType())),
     ]))
-    def sigs(vs: pd.Series) -> pd.DataFrame:
-        if len(vs) and isinstance(vs.iloc[0], np.ndarray):
+    def sigs(cells: pd.Series) -> pd.DataFrame:
+        # a null vector gets a null signature array, which posexplode
+        # turns into no rows
+        present = cells.notna().to_numpy()
+        vs = cells[present]
+        if not len(vs):
+            mat = np.zeros((0, dim), dtype=np.float64)
+        elif isinstance(vs.iloc[0], np.ndarray):
             # Arrow hands list<float> cells over as numpy arrays —
             # np.stack + astype widens float32→float64 exactly (same
             # values as the tolist() path, which round-trips through
@@ -194,9 +201,11 @@ def _sig_kernel(n_planes: int, dim: int, n_tables: int):
         with np.errstate(divide="ignore", invalid="ignore"):
             pf = mat[:, :m] / n[:, None]
         valid = (n > 0) & ~np.isnan(n)
+        sig_rows = iter(np.ascontiguousarray(out.T))
+        pf_rows = iter([row if ok else None for row, ok in zip(pf, valid)])
         return pd.DataFrame({
-            "sig": list(np.ascontiguousarray(out.T)),
-            "pf": [row if ok else None for row, ok in zip(pf, valid)],
+            "sig": [next(sig_rows) if p else None for p in present],
+            "pf": [next(pf_rows) if p else None for p in present],
         })
 
     return sigs

@@ -1,20 +1,23 @@
 """Tier rollups: continuous aggregates at 1m / 1h / 1d retention tiers.
 
-This is the Spark-native equivalent of the reference's hierarchy rollup — a
-sparse summing-matrix multiply over segments
-(/root/reference/etna/datasets/utils.py:292-359,
-/root/reference/etna/datasets/tsdataset.py:1391-1455) generalized to the time
-axis: each tier is ``groupBy(series, bucket(ts)).agg(...)`` and, because every
-aggregate we materialize is ALGEBRAIC (sum/count/min/max + sum-of-squares),
-each coarser tier derives from the previous one without touching raw data.
+This is the Spark-native equivalent of the reference library's hierarchy
+rollup (a sparse summing-matrix multiply over segments) generalized to
+the time axis: each tier is ``groupBy(series, bucket(ts)).agg(...)``, and
+every aggregate materialized is ALGEBRAIC (sum/count/min/max +
+sum-of-squares), so partial aggregates of any split of the input merge
+exactly (:func:`merge_partials`).
 
 Scale notes:
 - ``groupBy`` gets map-side partial aggregation for free (hash-partial →
   shuffle → final), so the shuffle carries one row per (series, bucket) per
   input partition, not per input row.
-- the cascade (1m → 1h → 1d) reads the *previous tier*, which is orders of
-  magnitude smaller than raw input — at 10^12 rows this is the difference
-  between one big shuffle and three.
+- the tier engine (``plans/tiers.py``) merges each input delta into every
+  tier's own rows in one aggregation: :func:`row_partials` turns raw rows
+  into one-row partials and :func:`merge_partials` merges them with the
+  tier rows of the touched days. No tier is derived from a finer one, so
+  retention of a finer tier never loses data of a coarser one.
+  :func:`rollup_cascade` (a coarser tier from a finer one) serves the
+  batch paths: the bench's rollup stage and the ``__spark_entry__`` smoke run.
 - skewed series keys are handled by the salted variant (two-phase agg, see
   :func:`rollup_salted`) plus AQE as backstop.
 """
@@ -145,9 +148,10 @@ def rollup_salted(
 
     Phase 1 groups by (series, bucket, salt) — the hot key's rows spread over
     ``n_salt`` reducers; phase 2 merges the algebraic partials. Associativity
-    of the aggregate set guarantees salted ≡ unsalted (pinned by
-    tests/test_salting.py). Salt is derived from a high-cardinality column so
-    it is deterministic, not random.
+    of the aggregate set guarantees salted ≡ unsalted (pinned by the
+    ``tok_rollup_1h_salted`` registry query against its DuckDB twin). Salt
+    is derived from a high-cardinality column so it is deterministic, not
+    random.
     """
     salted = df.withColumn("_salt", F.pmod(F.xxhash64(salt_col), F.lit(n_salt)))
     phase1 = (

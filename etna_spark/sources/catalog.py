@@ -13,13 +13,24 @@ SNAPSHOT CONTRACT the engine needs and implements it over plain parquet:
   without committing it, and ``overwrite_partitions`` atomically replaces
   the files of a partition subset with staged ones (the tier-refresh MERGE
   target: one staged write can feed several tables);
-- ``partitions()`` and ``read(..., partitions=...)`` list and prune by the
-  recorded file → partition map, so a refresh opens only the files of the
-  days it touches.
+- a table may carry a partition spec, a SQL expression over its rows
+  (Iceberg: a partition transform such as ``days(event_ts)``); ``append``
+  on such a table writes one ``partitionBy`` job, so every file holds one
+  partition value (Spark's null-partition dir is recorded as null);
+- the partition value and row count (from its parquet footer) of every
+  file a partitioned append or an overwrite commits are recorded in a
+  sidecar (Iceberg: the manifest entry's
+  partition tuple and ``record_count``). ``partitions()`` and
+  ``read(..., partitions=...)`` list and prune by it, so a refresh opens
+  only the files of the days it touches, and ``row_counts`` sums it per
+  partition over a snapshot range, so a refresh learns which days a delta
+  touches, and how many rows each, without a Spark job.
 
 Snapshots record the Spark schema of the rows they write (whenever it
 changes), and reads pass it to the parquet reader, so opening a table starts
-no schema-inference job.
+no schema-inference job. Reads name a staging dir instead of its files
+where they take all of them, so a scan of many files (a partitioned
+append writes one per task and partition) starts no listing job either.
 
 With Iceberg the same calls map to ``table.snapshot_id``, incremental scan
 (``start-snapshot-id``/``end-snapshot-id``) and ``overwritePartitions()``;
@@ -47,8 +58,13 @@ from collections.abc import Sequence
 from dataclasses import dataclass, replace
 from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# the dir name Spark's partitionBy gives a null partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 @dataclass
@@ -67,8 +83,15 @@ class Snapshot:
 
 
 class ParquetSnapshotTable:
-    def __init__(self, root: str):
+    """A snapshot-versioned parquet table. ``partition_spec`` (optional) is
+    a SQL expression over the table's rows whose value partitions the
+    files ``append`` writes; tables written only by
+    ``overwrite_partitions`` leave it unset, since their staged dirs
+    already name their partitions."""
+
+    def __init__(self, root: str, partition_spec: str | None = None):
         self.root = root
+        self.partition_spec = partition_spec
         os.makedirs(root, exist_ok=True)
 
     # -- snapshot log ---------------------------------------------------------
@@ -142,18 +165,64 @@ class ParquetSnapshotTable:
         os.rename(path, os.path.join(self.root, stage))
         return stage
 
+    def _move_up(self, stage: str) -> dict[str, dict]:
+        """Move the files of each ``<col>=<value>`` subdir of the staging dir
+        ``stage`` up into it, so the layout stays flat
+        (``data-<uuid>/*.parquet``: compaction and storage walks look one
+        level deep); returns each file's sidecar entry: its partition value,
+        from its subdir's name (None for Spark's null partition), and its
+        row count, from its parquet footer."""
+        entries = {}
+        out_dir = os.path.join(self.root, stage)
+        for i, d in enumerate(sorted(os.listdir(out_dir))):
+            sub = os.path.join(out_dir, d)
+            if not os.path.isdir(sub):
+                continue
+            value = unquote(d.split("=", 1)[1])  # Spark %XX-escapes paths
+            for f in sorted(os.listdir(sub)):
+                if f.endswith(".parquet"):
+                    # each partition dir restarts the task file names
+                    rel = os.path.join(stage, f"p{i}-{f}")
+                    path = os.path.join(self.root, rel)
+                    os.rename(os.path.join(sub, f), path)
+                    entries[rel] = {
+                        "partition": None if value == _NULL_PARTITION else value,
+                        "rows": pq.read_metadata(path).num_rows,
+                    }
+            shutil.rmtree(sub)
+        return entries
+
     def append(self, df: DataFrame, properties: dict | None = None) -> int:
-        """Append rows as a new snapshot; returns its id."""
-        files = self._stage_df(df)
-        return self._commit(self.snapshots(), files, properties,
-                            df.schema.jsonValue())
+        """Append rows as a new snapshot; returns its id. With a partition
+        spec the rows are written by one ``partitionBy`` job on the spec's
+        value and each file's partition and row count are recorded."""
+        snaps = self.snapshots()
+        if self.partition_spec is None:
+            files = self._stage_df(df)
+        else:
+            staged = self.stage_partitioned(
+                df.withColumn("__partition", F.expr(self.partition_spec)),
+                ["__partition"])
+            entries = self._move_up(os.path.basename(staged))
+            files = sorted(entries)
+            self._record_files(entries, snaps)
+        return self._commit(snaps, files, properties, df.schema.jsonValue())
+
+    @staticmethod
+    def _properties(snaps: list[Snapshot]) -> dict:
+        out: dict = {}
+        for s in snaps:
+            out.update(s.properties or {})
+        return out
+
+    def properties(self) -> dict:
+        """Every snapshot property at its newest value (watermark and
+        retention reads): one log read for all keys."""
+        return self._properties(self.snapshots())
 
     def latest_property(self, key: str, default=None):
-        """Highest-snapshot value of a snapshot property (watermark reads)."""
-        for s in reversed(self.snapshots()):
-            if s.properties and key in s.properties:
-                return s.properties[key]
-        return default
+        """Highest-snapshot value of a snapshot property."""
+        return self.properties().get(key, default)
 
     def _scan(self, spark: SparkSession, after_id: int, until_id: int | None,
               partitions: list | None = None) -> DataFrame | None:
@@ -166,14 +235,29 @@ class ParquetSnapshotTable:
         if partitions is not None:
             wanted = set(map(str, partitions))
             part_map = self._partition_map()
-            files = [f for f in files if part_map.get(f, set()) & wanted]
+            files = [f for f in files if part_map.get(f) in wanted]
         if not files:
             return None
         schema = self._schema(snaps)
         reader = spark.read
         if schema is not None:  # logs written before schemas were recorded
             reader = reader.schema(StructType.fromJson(schema))
-        return reader.parquet(*[os.path.join(self.root, f) for f in files])
+        return reader.parquet(*self._paths(files))
+
+    def _paths(self, files: list[str]) -> list[str]:
+        """Reader paths for ``files``: a staging dir whole where they are
+        every parquet file it holds (a partitioned append writes one file
+        per task and partition), else the files. Spark lists more than 32
+        paths with a Spark job of its own."""
+        by_dir: dict[str, list[str]] = {}
+        for f in files:
+            by_dir.setdefault(os.path.dirname(f), []).append(f)
+        paths = []
+        for d, fs in by_dir.items():
+            held = [x for x in os.listdir(os.path.join(self.root, d))
+                    if x.endswith(".parquet")]
+            paths += [d] if len(held) == len(fs) else fs
+        return [os.path.join(self.root, p) for p in paths]
 
     def read(
         self, spark: SparkSession, snapshot_id: int | None = None,
@@ -206,103 +290,105 @@ class ParquetSnapshotTable:
         Iceberg ``overwritePartitions()``.
 
         No Spark job runs here: the files are moved up out of their
-        partition subdirs, so the layout stays flat (``data-<uuid>/*.parquet``:
-        compaction and storage walks look one level deep), the file →
-        partition map comes from the subdir names, and the snapshot-log swap
-        commits them. Every file holds exactly one partition value, so
-        retention and later overwrites retire whole files, never rewrite
-        them. A staged partition not named raises ``ValueError`` and
-        commits nothing (the staged files stay orphans for
-        ``compact_files``)."""
-        file_parts: dict[str, str] = {}
-        out_dir = os.path.join(self.root, stage)
-        for i, d in enumerate(sorted(os.listdir(out_dir))):
-            sub = os.path.join(out_dir, d)
-            if not os.path.isdir(sub):
-                continue
-            value = unquote(d.split("=", 1)[1])  # Spark %XX-escapes paths
-            for f in sorted(os.listdir(sub)):
-                if f.endswith(".parquet"):
-                    # each partition dir restarts the task file names
-                    rel = os.path.join(stage, f"p{i}-{f}")
-                    os.rename(os.path.join(sub, f), os.path.join(self.root, rel))
-                    file_parts[rel] = value
-            shutil.rmtree(sub)
+        partition subdirs (``_move_up``), the file → partition map comes
+        from the subdir names, and the snapshot-log swap commits them.
+        Every file holds exactly one partition value, so retention and
+        later overwrites retire whole files, never rewrite them. A staged
+        partition not named raises ``ValueError`` and commits nothing (the
+        staged files stay orphans for ``compact_files``)."""
+        entries = self._move_up(stage)
         wanted = set(map(str, partition_values))
-        stray = set(file_parts.values()) - wanted
+        stray = {e["partition"] for e in entries.values()} - wanted
         if stray:
-            raise ValueError(f"rows outside the named partitions: {sorted(stray)}")
+            raise ValueError(
+                f"rows outside the named partitions: {sorted(map(str, stray))}")
         snaps = self.snapshots()
-        retired = {f for f, parts in self._partition_map().items() if parts & wanted}
-        kept_snaps = self._retire(snaps, retired)
-        # partition sidecar first, snapshot log last: the log write is the
-        # atomic commit point, and the sidecar only matters for files the log
-        # references
-        self._set_partition_map_entries(file_parts)
-        return self._commit(kept_snaps, sorted(file_parts), properties,
-                            schema.jsonValue())
+        # the sidecar keeps the entries of the files it retires until the
+        # next write: until the log swap, the log still references them
+        self._record_files(entries, snaps)
+        retired = {f for f, p in self._partition_map().items() if p in wanted}
+        return self._commit(self._retire(snaps, retired), sorted(entries),
+                            properties, schema.jsonValue())
 
     @staticmethod
     def _retire(snaps: list[Snapshot], retired: set[str]) -> list[Snapshot]:
         """``snaps`` without the ``retired`` files. Everything else stays:
-        latest_property() walks the whole log, so dropping historical
+        properties() merges the whole log, so dropping historical
         properties would erase the tier watermark that refresh reads
         (double-apply hazard after retention), and reads take the schema
         from the newest snapshot that recorded one."""
         return [replace(s, files=[f for f in s.files if f not in retired])
                 for s in snaps]
 
-    # partition sidecar: file -> set of partition values it contains
+    # partition sidecar: file -> {"partition": value, "rows": row count}
     @property
     def _part_map_path(self) -> str:
         return os.path.join(self.root, "_partitions.json")
 
-    def _partition_map(self) -> dict[str, set]:
+    def _file_entries(self) -> dict[str, dict]:
         if not os.path.exists(self._part_map_path):
             return {}
         with open(self._part_map_path) as f:
-            return {k: set(v) for k, v in json.load(f).items()}
+            return json.load(f)
 
-    def partitions(self, after_id: int = 0, until_id: int | None = None) -> set[str]:
+    def _partition_map(self) -> dict[str, str | None]:
+        return {f: e["partition"] for f, e in self._file_entries().items()}
+
+    def _record_files(self, entries: dict[str, dict], snaps: list[Snapshot]) -> None:
+        """Add ``entries`` to the sidecar, dropping those of files no
+        snapshot of ``snaps`` (the log as committed) references. Written
+        before the snapshot log, the atomic commit point: the sidecar only
+        matters for files the log references."""
+        live = {f for s in snaps for f in s.files}
+        m = {f: e for f, e in self._file_entries().items() if f in live}
+        m.update(entries)
+        tmp = self._part_map_path + f".tmp-{uuid.uuid4().hex}"
+        with open(tmp, "w") as fh:
+            json.dump(m, fh, indent=1)
+        os.replace(tmp, self._part_map_path)
+
+    def _files_between(self, after_id: int, until_id: int | None) -> list[str]:
+        return [f for s in self.snapshots()
+                if after_id < s.id and (until_id is None or s.id <= until_id)
+                for f in s.files]
+
+    def partitions(self, after_id: int = 0, until_id: int | None = None) -> set:
         """Partition values of the live files added by snapshots
         (after_id, until_id]; by default every partition the table holds.
         Reads only the catalog's own files, never the data."""
         part_map = self._partition_map()
-        out: set[str] = set()
-        for s in self.snapshots():
-            if after_id < s.id and (until_id is None or s.id <= until_id):
-                for f in s.files:
-                    out |= part_map.get(f, set())
+        return {part_map[f] for f in self._files_between(after_id, until_id)
+                if f in part_map}
+
+    def row_counts(self, after_id: int = 0, until_id: int | None = None) -> dict:
+        """Rows per partition value (None: the null partition) of the live
+        files added by snapshots (after_id, until_id], summed from the
+        recorded footer counts. Reads only the catalog's own files, never
+        the data. A file with no recorded entry (written before this table
+        recorded partitions and row counts) raises ``ValueError``."""
+        entries = self._file_entries()
+        out: dict = {}
+        for f in self._files_between(after_id, until_id):
+            if f not in entries:
+                raise ValueError(
+                    f"{os.path.join(self.root, f)} has no recorded partition "
+                    "and row count: it was written before they were recorded; "
+                    "rebuild the warehouse from its input")
+            part = entries[f]["partition"]
+            out[part] = out.get(part, 0) + entries[f]["rows"]
         return out
 
-    def _set_partition_map_entries(self, file_parts: dict[str, str]) -> None:
-        m = self._partition_map()
-        live = set()
-        for s in self.snapshots():
-            live.update(s.files)
-        m = {k: v for k, v in m.items() if k in live}
-        for f, v in file_parts.items():
-            m[f] = {v}
-        tmp = self._part_map_path + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as fh:
-            json.dump({k: sorted(v) for k, v in m.items()}, fh, indent=1)
-        os.replace(tmp, self._part_map_path)
-
-    def drop_partitions(self, partition_values: list) -> int:
-        """Retention: drop whole partitions (expire old tier windows)."""
+    def drop_partitions(self, partition_values: list,
+                        properties: dict | None = None) -> int:
+        """Retention: drop whole partitions (expire old tier windows). The
+        new snapshot carries every property forward, updated with
+        ``properties``, so even a log rewrite that trims history keeps the
+        watermark visible."""
         vals = set(map(str, partition_values))
-        part_map = self._partition_map()
-        retired = {f for f, parts in part_map.items() if parts and parts <= vals}
+        retired = {f for f, p in self._partition_map().items() if p in vals}
         snaps = self.snapshots()
-        kept = self._retire(snaps, retired)
-        # carry the current watermark forward on the retention snapshot too,
-        # so even a log rewrite that trims history keeps the watermark visible
-        props = {}
-        for s in reversed(snaps):
-            if s.properties:
-                props = dict(s.properties)
-                break
-        return self._commit(kept, [], props or None, None)
+        props = {**self._properties(snaps), **(properties or {})}
+        return self._commit(self._retire(snaps, retired), [], props or None, None)
 
     def compact_files(self) -> None:
         """Physically delete files no longer referenced by any snapshot

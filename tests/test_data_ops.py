@@ -19,6 +19,7 @@ from etna_spark.data.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_lsh,
     embedding_neardup_pairs,
+    embedding_signatures,
 )
 from etna_spark.data.text import add_text_stats, lang_scores, token_count_bpe_ish
 
@@ -280,6 +281,21 @@ def test_embedding_neardup_degenerate_vectors(spark, tmp_path):
                                       dim=8).collect()
         assert [(r["id_a"], r["id_b"]) for r in out] == [(5, 6)]
         assert out[0]["cosine_sim"] == pytest.approx(1.0)
+
+
+def test_embedding_null_vector_gives_no_rows(spark):
+    """A null vector has no signature rows and joins no pair, also when a
+    whole Arrow batch is null; the other vectors keep theirs."""
+    b = [0.0, 1.0, 0.0, 0.0, 0.0, 0.0, 1.0, 0.0]
+    rows = [(0, None), (5, b), (6, [x * 1.0001 for x in b]), (7, None)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    sigs = embedding_signatures(emb.coalesce(1), n_planes=4, dim=8,
+                                n_tables=2).collect()
+    assert sorted(r["_id"] for r in sigs) == [5, 5, 6, 6]
+    nulls = emb.filter(F.col("embedding").isNull()).coalesce(1)
+    assert embedding_signatures(nulls, n_planes=4, dim=8).count() == 0
+    out = embedding_neardup_pairs(emb, threshold=0.9, n_planes=4, dim=8).collect()
+    assert [(r["id_a"], r["id_b"]) for r in out] == [(5, 6)]
 
 
 def test_multimodal_features(spark):

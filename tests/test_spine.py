@@ -5,7 +5,9 @@ exchange)."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import io
 import random
 
 import pytest
@@ -71,10 +73,17 @@ def test_gap_expansion_equals_spine_join(spark, seed, per_series):
     )
 
 
+def _physical_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="simple")
+    return buf.getvalue()
+
+
 def test_gap_expansion_plan_has_no_join(spark):
     df = _random_panel(spark, 99)
     reg = regularize(df, "1h", series_cols=("series",), ts_col="bucket_ts")
-    plan = reg._jdf.queryExecution().executedPlan().toString()
+    plan = _physical_plan(reg)
     # the only join is the broadcast of the 1-row global bounds — the old
     # spine-join formulation had a SortMergeJoin on (series, ts) here
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
@@ -82,7 +91,7 @@ def test_gap_expansion_plan_has_no_join(spark):
     # downstream fill reuses the same (series) clustering: a window right
     # after regularize must not introduce a second hash exchange
     filled = ffill(reg, ["v"], series_cols=("series",), ts_col="bucket_ts")
-    p2 = filled._jdf.queryExecution().executedPlan().toString()
+    p2 = _physical_plan(filled)
     assert "SortMergeJoin" not in p2 and "ShuffledHashJoin" not in p2
     assert p2.count("hashpartitioning") == 1
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from etna_spark.operators.rollup import rollup
+from etna_spark.plans import tiers
 from etna_spark.plans.tiers import TierEngine
 from etna_spark.sources.catalog import ParquetSnapshotTable
 from etna_spark.synth import token_table
@@ -58,6 +59,26 @@ def test_incremental_refresh_equals_full(spark, tokens_df, tmp_path):
             "part_day", F.date_format("bucket_ts", "yyyy-MM-dd")
         )
         assert _tiers_equal(a.select(*direct.columns), direct)
+
+
+def test_coalesced_merge_equals_spread_merge(spark, tokens_df, tmp_path, monkeypatch):
+    """The merge shape for deltas above ``_SPREAD_MAX_ROWS`` (map-side
+    partial aggregate, AQE-coalesced shuffle) gives the same tiers as the
+    fixed-partition shape small deltas take."""
+    part1 = tokens_df.filter(F.xxhash64("doc_id") % 10 < 7)
+    part2 = tokens_df.filter(F.xxhash64("doc_id") % 10 >= 7)
+    engines = {}
+    for limit in (tiers._SPREAD_MAX_ROWS, 0):
+        monkeypatch.setattr(tiers, "_SPREAD_MAX_ROWS", limit)
+        eng = engines[limit] = TierEngine(str(tmp_path / f"wh{limit}"))
+        for part in (part1, part2):
+            eng.input.append(part)
+            eng.refresh(spark)
+    for tier in TIERS:
+        a, b = (e.tier_df(spark, tier) for e in engines.values())
+        assert _tiers_equal(a, b), tier
+        direct = _direct(tokens_df, tier)
+        assert _tiers_equal(b.select(*direct.columns), direct), tier
 
 
 def test_rerun_is_noop(spark, tokens_df, tmp_path):
@@ -230,8 +251,8 @@ def _newest_metrics(eng) -> dict[str, dict]:
 
 
 def test_incremental_refresh_job_budget(spark, tokens_df, tmp_path):
-    """After a seed refresh, a one-day append + refresh runs at most 4 Spark
-    jobs in all (counted here in a job group of the test's own), and every
+    """After a seed refresh, a one-day append + refresh runs at most 2 Spark
+    jobs in all (the write: the days and rows in come from the catalog) (counted here in a job group of the test's own), and every
     tier's metrics record carries the refresh's shared run id, job count
     and wall time."""
     eng = TierEngine(str(tmp_path / "wh"))
@@ -256,7 +277,7 @@ def test_incremental_refresh_job_budget(spark, tokens_df, tmp_path):
     assert len(shared) == 1, shared
     ((run_id, jobs, wall),) = shared
     assert run_id == r["1m"]["run_id"]
-    assert 1 <= jobs <= total <= 4, (jobs, total)
+    assert 1 <= jobs <= total <= 2, (jobs, total)
     # wall time covers the whole refresh up to the commits
     assert wall > 0
 
@@ -294,26 +315,31 @@ def test_lineage_matches_committed_files(spark, tokens_df, tmp_path):
 
 
 def test_tier_files_hold_one_partition(spark, tokens_df, tmp_path):
-    """Every committed tier file sits flat in a ``data-<uuid>/`` dir and
-    holds exactly one ``part_day`` (a column in the file), the one the
-    partition map records for it."""
+    """Every committed tier and input file sits flat in a ``data-<uuid>/``
+    dir and holds exactly one day (``part_day`` in a tier file, the day of
+    ``event_ts`` in an input file), the one the partition map records for
+    it, next to the file's row count."""
     eng = TierEngine(str(tmp_path / "wh"))
     eng.input.append(tokens_df)
     eng.refresh(spark)
     eng.input.append(_one_day_extra(spark, "p_", "2026-01-03"))
     eng.refresh(spark)
-    for tier in TIERS:
-        table = eng.tiers[tier]
-        part_map = table._partition_map()
+    for table in (eng.input, *eng.tiers.values()):
+        entries = table._file_entries()
         files = [f for s in table.snapshots() for f in s.files]
         assert files
         for f in files:
             stage, name = f.split(os.sep)
             assert stage.startswith("data-") and name.endswith(".parquet")
-            days = set(pq.read_table(os.path.join(table.root, f),
-                                     columns=["part_day"])["part_day"].to_pylist())
-            assert len(days) == 1 and days == part_map[f], (f, days, part_map[f])
-        assert table.partitions() == {d for f in files for d in part_map[f]}
+            rows = pq.read_table(os.path.join(table.root, f))
+            if table is eng.input:
+                days = {t.strftime("%Y-%m-%d") for t in rows["event_ts"].to_pylist()}
+            else:
+                days = set(rows["part_day"].to_pylist())
+            assert days == {entries[f]["partition"]}, (f, days, entries[f])
+            assert entries[f]["rows"] == rows.num_rows
+        assert table.partitions() == {entries[f]["partition"] for f in files}
+    assert sum(eng.input.row_counts().values()) == eng.input.read(spark).count()
 
 
 def test_killed_partitioned_write_ignored_and_compacted(spark, tokens_df, tmp_path,
@@ -383,7 +409,7 @@ def test_seven_day_input_one_write_per_tier(spark, tmp_path, monkeypatch):
     for tier in TIERS:
         assert len(r[tier]["partitions"]) == 7
         assert eng.tiers[tier].partitions() == set(r[tier]["partitions"])
-        assert metrics[tier]["spark_jobs"] <= 4
+        assert metrics[tier]["spark_jobs"] <= 2
     direct = rollup(week, "1h").withColumn(
         "part_day", F.date_format("bucket_ts", "yyyy-MM-dd"))
     assert _tiers_equal(eng.tier_df(spark, "1h").select(*direct.columns), direct)
@@ -415,24 +441,89 @@ def _direct(df, tier):
 
 
 def test_late_row_after_retention(spark, tokens_df, tmp_path):
-    """A late row for a day the 1m tier has already expired: 1h and 1d
-    merge it into their own rows of that day, so they still equal a direct
-    rollup of all input."""
+    """A late row for a day the 1m tier has already expired: 1m, whose
+    retention cutoff is past that day, is skipped and holds no partition of
+    it; 1h and 1d merge it into their own rows of that day, so they still
+    equal a direct rollup of all input. The coarser tiers' lineage for the
+    day records as rows in the finer tier's points out: 1h takes 1m's
+    newest lineage record of the day (from before it expired), 1d takes
+    1h's points out of this commit."""
     eng = TierEngine(str(tmp_path / "wh"))
     eng.input.append(tokens_df)
     eng.refresh(spark)
     assert eng.expire("1m", keep_days=1, now_day="2026-01-03") == ["2026-01-01"]
+    old_1m = _newest_lineage(eng)[("1m", "2026-01-01")]
     late = (tokens_df.limit(1)
             .withColumn("doc_id", F.lit("late_0"))
             .withColumn("event_ts",
                         F.lit("2026-01-01 07:00:00").cast(tokens_df.schema["event_ts"].dataType)))
     eng.input.append(late)
     r = eng.refresh(spark)
-    assert all(r[t]["partitions"] == ["2026-01-01"] for t in TIERS)
+    assert r["1m"]["skipped"]
+    assert all(r[t]["partitions"] == ["2026-01-01"] for t in ("1h", "1d"))
+    assert "2026-01-01" not in eng.tiers["1m"].partitions()
     everything = tokens_df.unionByName(late)
+    kept_1m = _direct(everything, "1m").filter(F.col("part_day") >= "2026-01-02")
+    assert _tiers_equal(eng.tier_df(spark, "1m").select(*kept_1m.columns), kept_1m)
     for tier in ("1h", "1d"):
         direct = _direct(everything, tier)
         assert _tiers_equal(eng.tier_df(spark, tier).select(*direct.columns), direct), tier
+    lineage = _newest_lineage(eng)
+    assert lineage[("1h", "2026-01-01")][0] == old_1m[1]
+    assert lineage[("1d", "2026-01-01")][0] == lineage[("1h", "2026-01-01")][1]
+    # the cutoff holds without a new expire, and a rerun is a no-op
+    assert eng.tiers["1m"].latest_property("retention_cutoff") == "2026-01-02"
+    assert all(eng.refresh(spark)[t]["skipped"] for t in TIERS)
+
+
+def test_null_timestamps_reach_no_tier(spark, tokens_df, tmp_path):
+    """Rows without a timestamp count in the 1m metrics' rows in and reach
+    no tier, so every tier equals a direct rollup of the other rows; a
+    delta of only such rows is skipped and leaves every watermark as it
+    was."""
+    ts = tokens_df.schema["event_ts"].dataType
+    mixed = tokens_df.withColumn(
+        "event_ts", F.when(F.xxhash64("doc_id") % 7 == 0, F.lit(None).cast(ts))
+        .otherwise(F.col("event_ts")))
+    timed = mixed.filter(F.col("event_ts").isNotNull())
+    assert timed.count() < tokens_df.count()
+    eng = TierEngine(str(tmp_path / "wh"))
+    eng.input.append(mixed)
+    r = eng.refresh(spark)
+    assert r["1m"]["rows_in"] == tokens_df.count()
+    assert _newest_metrics(eng)["1m"]["rows_in"] == tokens_df.count()
+    assert sum(rec["rows_in"] for rec in eng.manifest.records()
+               if rec["kind"] == "lineage" and rec["tier"] == "1m") == timed.count()
+    for tier in TIERS:
+        direct = _direct(timed, tier)
+        assert _tiers_equal(eng.tier_df(spark, tier).select(*direct.columns), direct), tier
+
+    wms = {t: eng.tiers[t].latest_property("input_snapshot_id") for t in TIERS}
+    eng.input.append(mixed.filter(F.col("event_ts").isNull()))
+    assert eng.input.row_counts(wms["1m"]) == {None: tokens_df.count() - timed.count()}
+    r = eng.refresh(spark)
+    assert all(r[t]["skipped"] for t in TIERS)
+    assert {t: eng.tiers[t].latest_property("input_snapshot_id") for t in TIERS} == wms
+
+
+def test_unrecorded_input_file_raises_before_any_job(spark, tokens_df, tmp_path):
+    """An input file with no recorded partition (a warehouse built before
+    the input table recorded them) makes refresh raise ``ValueError``
+    before any Spark job, and nothing is committed."""
+    eng = TierEngine(str(tmp_path / "wh"))
+    ParquetSnapshotTable(eng.input.root).append(tokens_df)  # no partition spec
+    sc = spark.sparkContext
+    sc.setJobGroup("tier-unrecorded-input", "refresh over an unrecorded input")
+    try:
+        with pytest.raises(ValueError, match="rebuild the warehouse"):
+            eng.refresh(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    time.sleep(1)  # the status tracker is fed asynchronously
+    assert sc.statusTracker().getJobIdsForGroup("tier-unrecorded-input") == []
+    assert all(eng.tiers[t].current_snapshot_id() == 0 for t in TIERS)
+    assert eng.manifest.records() == []
 
 
 def _newest_lineage(eng) -> dict[tuple[str, str], tuple]:

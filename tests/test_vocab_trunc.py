@@ -5,6 +5,9 @@ K-independent (the literal path's plan grows with K — the r5 verdict's
 
 from __future__ import annotations
 
+import contextlib
+import io
+
 from pyspark.sql import functions as F
 
 from etna_spark.data.vocab import truncate_vocab, vocab_topk
@@ -34,31 +37,38 @@ def test_literal_and_broadcast_remap_identical(spark):
     assert any(t in keep for t in flat)
 
 
+def _plan(df, mode: str = "formatted") -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode=mode)
+    return buf.getvalue()
+
+
+def _analyzed(df) -> str:
+    """The analyzed logical plan section of the extended explain."""
+    text = _plan(df, "extended")
+    return text.split("== Analyzed Logical Plan ==")[1].split(
+        "== Optimized Logical Plan ==")[0]
+
+
 def test_broadcast_remap_plan_is_k_independent(spark):
     df = _toks(spark)
     small = truncate_vocab(df, k=10, mode="broadcast", out_col="m")
     big = truncate_vocab(df, k=400, mode="broadcast", out_col="m")
-    p_small = small._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
-    p_big = big._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"))
+    p_small = _plan(small)
+    p_big = _plan(big)
     # broadcast path: plan text does not grow with K
     assert abs(len(p_big) - len(p_small)) < 200
     # literal path: plan text DOES grow with K (the shape the broadcast
     # path exists to avoid)
     l_small = truncate_vocab(df, k=10, mode="literal", out_col="m")
     l_big = truncate_vocab(df, k=400, mode="literal", out_col="m")
-    assert len(l_big._jdf.queryExecution().analyzed().toString()) > len(
-        l_small._jdf.queryExecution().analyzed().toString()
-    ) + 1000
+    assert len(_analyzed(l_big)) > len(_analyzed(l_small)) + 1000
 
 
 def test_auto_mode_switches(spark):
     df = _toks(spark)
     lit = truncate_vocab(df, k=10, mode="auto", literal_max=20, out_col="m")
     bc = truncate_vocab(df, k=30, mode="auto", literal_max=20, out_col="m")
-    assert "isin" in str(lit._jdf.queryExecution().analyzed().toString()) or \
-        "IN (" in str(lit._jdf.queryExecution().analyzed().toString())
-    assert "_remap" in str(bc._jdf.queryExecution().analyzed().toString())
+    assert "isin" in _analyzed(lit) or "IN (" in _analyzed(lit)
+    assert "_remap" in _analyzed(bc)
