@@ -18,19 +18,20 @@ Format (bit-packed, MSB first):
 Lossless for any float64 incl. NaN/±inf (bit-pattern identity) and any
 monotone or non-monotone int64 timestamps.
 
-Execution model: encode/decode run inside ``applyInPandas`` over
-(series, chunk) groups, each group sorted by time (``sortWithinPartitions``
-before encoding — the codec requires time order). The per-chunk Python/numpy
-kernel is Arrow-batched; XOR/leading-zero analysis is vectorized in numpy,
-bit emission is a tight per-point loop over precomputed arrays (at cluster
-scale this kernel is the natural candidate for a native build — the
-surrounding plan is unchanged).
+Execution model: both directions are one ``mapInArrow`` over Arrow
+batches. Encode groups the points of each (series, chunk) into two sorted
+arrays on the JVM (the codec requires time order) and hands the kernel
+slices of one flat buffer per column; decode expands each blob row on its
+own, so it needs no shuffle. XOR/leading-zero analysis and bit packing are
+vectorized in numpy; decode is a tight per-point loop (at cluster scale
+this kernel is the natural candidate for a native build — the surrounding
+plan is unchanged).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -41,6 +42,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from etna_spark.sqltext import ident
 
 
 class _BitWriter:
@@ -550,6 +553,17 @@ def decode_chunk(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
 # ---------------------------------------------------------------------------
 
 
+def _points(arr: pa.ListArray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(offsets, timestamps, values) of a list<struct<_ts, _v>> column:
+    row r's points are ``[offsets[r], offsets[r + 1])`` of the two flat
+    arrays. Null values read as NaN."""
+    ts, vals = arr.values.flatten()
+    if ts.null_count:
+        raise ValueError("Gorilla encode: null timestamp")
+    return (arr.offsets.to_numpy(), ts.to_numpy(),
+            vals.to_numpy(zero_copy_only=False))
+
+
 def encode_series(
     df: DataFrame,
     series_cols=("source",),
@@ -564,53 +578,60 @@ def encode_series(
     ``collect_list`` + ``sort_array``) before crossing into Python, so the
     Arrow exchange carries one row per (series, chunk) with two array cells
     instead of one row per point — the per-row exchange overhead, not the
-    numpy kernel, dominates encode cost at tier sizes."""
+    numpy kernel, dominates encode cost at tier sizes. ``mapInArrow`` hands
+    each batch's arrays to the kernel as slices of one flat buffer per
+    column (Arrow list offsets), with no pandas object array between."""
     series_cols = list(series_cols)
-    pts = F.sort_array(
-        F.collect_list(F.struct(F.col("_ts"), F.col("_v")))
-    )
+    # mapInArrow resolves its input columns by unquoted name, so the keys
+    # travel under plain positional names and get theirs back on output
+    keys = [f"_k{i}" for i in range(len(series_cols))]
     grouped = (
-        df.select(
-            *series_cols,
-            F.date_trunc(chunk, ts_col).cast("long").alias("chunk_start"),
-            F.col(ts_col).cast("long").alias("_ts"),
-            F.col(value_col).cast("double").alias("_v"),
+        df.selectExpr(
+            *[f"{ident(c)} AS {k}" for c, k in zip(series_cols, keys)],
+            f"CAST(date_trunc('{chunk}', {ident(ts_col)}) AS BIGINT) AS chunk_start",
+            f"CAST({ident(ts_col)} AS BIGINT) AS _ts",
+            f"CAST({ident(value_col)} AS DOUBLE) AS _v",
         )
-        .groupBy(*series_cols, "chunk_start")
-        .agg(pts.alias("_pts"))
-        .select(
-            *series_cols, "chunk_start",
-            F.col("_pts._ts").alias("_tss"),
-            F.col("_pts._v").alias("_vs"),
-        )
+        .groupBy(*keys, "chunk_start")
+        .agg(F.expr("sort_array(collect_list(struct(_ts, _v))) AS _pts"))
+    )
+    n_keep = len(series_cols) + 1
+    names = [*series_cols, "chunk_start", "codec_blob", "n_points", "checksum"]
+    out_schema = StructType(
+        [StructField(c, f.dataType, f.nullable)
+         for c, f in zip(series_cols, grouped.schema.fields)]
+        + [
+            StructField("chunk_start", LongType()),
+            StructField("codec_blob", BinaryType()),
+            StructField("n_points", IntegerType()),
+            StructField("checksum", LongType()),
+        ]
     )
 
-    @F.pandas_udf("codec_blob binary, checksum long")
-    def enc_udf(tss: pd.Series, vs: pd.Series) -> pd.DataFrame:
-        blobs, csums = [], []
-        for t, v in zip(tss, vs):
-            ts_a = np.asarray(t, dtype=np.int64)
-            v_a = np.asarray(v, dtype=np.float64)
-            blobs.append(encode_chunk(ts_a, v_a))
-            csums.append(
-                int(
-                    (ts_a.astype(np.uint64).sum() + v_a.view(np.uint64).sum())
-                    % np.uint64(1 << 63)
-                )
+    def enc(batches):
+        for b in batches:
+            offs, tss, vs = _points(b.column(n_keep))
+            blobs, csums = [], []
+            for lo, hi in zip(offs[:-1], offs[1:]):
+                t, v = tss[lo:hi], vs[lo:hi]
+                blobs.append(encode_chunk(t, v))
+                csums.append(int((t.astype(np.uint64).sum()
+                                  + v.view(np.uint64).sum()) % np.uint64(1 << 63)))
+            yield pa.RecordBatch.from_arrays(
+                b.columns[:n_keep] + [
+                    pa.array(blobs, pa.binary()),
+                    pa.array(np.diff(offs).astype(np.int32)),
+                    pa.array(csums, pa.int64()),
+                ],
+                names=names,
             )
-        return pd.DataFrame({"codec_blob": blobs, "checksum": csums})
 
-    return grouped.select(
-        *series_cols,
-        "chunk_start",
-        enc_udf("_tss", "_vs").alias("_enc"),
-        F.size("_tss").cast("int").alias("n_points"),
-    ).select(
-        *series_cols, "chunk_start",
-        F.col("_enc.codec_blob").alias("codec_blob"),
-        "n_points",
-        F.col("_enc.checksum").alias("checksum"),
-    )
+    return grouped.mapInArrow(enc, out_schema)
+
+
+# decoded points per Arrow batch handed back to the JVM: the Arrow batch
+# size bounds blob rows, not points, and one day of a 1m series is 1,440
+_DECODE_BATCH_POINTS = 1 << 16
 
 
 def decode_series(
@@ -619,6 +640,9 @@ def decode_series(
     ts_col: str = "bucket_ts",
     value_col: str = "value",
 ) -> DataFrame:
+    """(series..., ts_col, value_col) — every point of every blob. Each blob
+    decodes on its own, so this is one ``mapInArrow`` over the blob rows: no
+    shuffle, no per-series pandas frame."""
     series_cols = list(series_cols)
     out_schema = StructType(
         [encoded.schema[c] for c in series_cols]
@@ -627,17 +651,35 @@ def decode_series(
             StructField(value_col, DoubleType(), True),
         ]
     )
+    names = [*series_cols, ts_col, value_col]
+    n_keys = len(series_cols)
 
-    def dec(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for _, row in pdf.iterrows():
-            ts, vals = decode_chunk(bytes(row["codec_blob"]))
-            f = pd.DataFrame({ts_col: ts, value_col: vals})
-            for c in series_cols:
-                f[c] = row[c]
-            frames.append(f[series_cols + [ts_col, value_col]])
-        if not frames:
-            return pd.DataFrame(columns=series_cols + [ts_col, value_col])
-        return pd.concat(frames, ignore_index=True)
+    def dec(batches):
+        for b in batches:
+            blobs = b.column(n_keys).to_pylist()
+            start = 0
+            while start < len(blobs):
+                rows, tss, vals, points = [], [], [], 0
+                stop = start
+                while stop < len(blobs) and points < _DECODE_BATCH_POINTS:
+                    t, v = decode_chunk(blobs[stop])
+                    rows.append(np.full(len(t), stop - start, dtype=np.int64))
+                    tss.append(t)
+                    vals.append(v)
+                    points += len(t)
+                    stop += 1
+                idx = pa.array(np.concatenate(rows))
+                keys = [c.slice(start, stop - start).take(idx)
+                        for c in b.columns[:n_keys]]
+                yield pa.RecordBatch.from_arrays(
+                    keys + [pa.array(np.concatenate(tss)),
+                            pa.array(np.concatenate(vals))],
+                    names=names,
+                )
+                start = stop
 
-    return encoded.groupBy(*series_cols).applyInPandas(dec, out_schema)
+    # positional key names: see encode_series
+    return encoded.selectExpr(
+        *[f"{ident(c)} AS _k{i}" for i, c in enumerate(series_cols)],
+        "codec_blob",
+    ).mapInArrow(dec, out_schema)

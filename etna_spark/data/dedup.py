@@ -20,14 +20,38 @@ xxhash64 at scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etna_spark.data.text import HASH_MOD, word_code, word_hash61, words
+from etna_spark.data.text import HASH_MOD, word_hash61, words
+from etna_spark.sqltext import double, ident
 
-# LCG-ish mixing constants for the MinHash permutation family
-_PERM_A = 1103515245
-_PERM_B = 12345
+# The MinHash permutation family: permutation i maps a shingle hash h to
+# (a_i·h + b_i) mod p (p = HASH_MOD), with a_i, b_i drawn independently in
+# [1, p) (splitmix64 of 2i and 2i+1, reduced mod p−1, plus 1). Independent
+# coefficients matter: the family (i+1)·(A·h + B) mod p used before made
+# every permutation a multiple of one value, so one hash collision between
+# two unrelated docs won most of their 16 minima at once. h < p and
+# a_i < p keep every product below 2^60, inside BIGINT under ANSI mode.
+# The dedup_minhash_lsh oracle (registry_ops3) replays this table.
+MINHASH_PERMS = (
+    (893357628, 493524570), (323194151, 446402582),
+    (300873973, 346691917), (300820335, 745837146),
+    (908978881, 69808257), (46600587, 955562744),
+    (359490484, 938848372), (260298389, 638669822),
+    (277502954, 655903268), (585608395, 506791545),
+    (71195965, 739678680), (412550793, 111299787),
+    (195649025, 665586862), (42776609, 860553443),
+    (549845707, 241155439), (357639181, 96837743),
+    (357810416, 67396045), (16642002, 136440328),
+    (98767996, 803537714), (192663775, 399744421),
+    (233533721, 567659826), (678530714, 181380821),
+    (261539776, 596169099), (143972002, 931630162),
+    (478282354, 316242521), (196745470, 104644839),
+    (797932133, 887272625), (858525432, 967813633),
+    (657586838, 761355698), (627319801, 801214593),
+    (903005564, 267315306), (274159521, 725271006),
+)
 
 
 def exact_dedup(
@@ -41,48 +65,28 @@ def exact_dedup(
     )
 
 
-def shingles_of_words(w: Column, k: int = 3) -> Column:
-    """Word k-shingles from an ALREADY-SPLIT words array column.
+def _shingles_sql(w: str, k: int) -> str:
+    """SQL for the word k-shingles (joined strings) of the words array ``w``.
 
-    r6 shape: ``concat_ws`` over ``k`` null-safe :func:`F.get` element
-    reads instead of ``array_join(slice(...))`` — no per-shingle array
-    allocation, and the caller binds the words array once (a projected
-    column or HOF lambda variable) so the split is not re-evaluated per
-    shingle (interpreted HOF lambdas have no common-subexpression
-    elimination: the old form re-split the text for every shingle —
-    measured 9.2 s → 4.4 s for the 38M-shingle bench corpus).
-    ``concat_ws`` skips the NULLs that ``F.get`` returns past the end of
-    a short (< k words) document, which joins exactly the same prefix
+    ``concat_ws`` over ``k`` null-safe ``get`` element reads instead of
+    ``array_join(slice(...))``: no per-shingle array allocation, and the
+    caller binds the words array once as a projected column, so the split
+    is not re-evaluated per shingle (interpreted HOF lambdas have no
+    common-subexpression elimination: re-splitting the text for every
+    shingle measured 9.2 s → 4.4 s for the 38M-shingle bench corpus).
+    ``concat_ws`` skips the NULLs that ``get`` returns past the end of a
+    short (< k words) document, which joins exactly the same prefix
     ``array_join`` produced — value-identical, pinned by tests."""
-    n = F.size(w)
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-        lambda i: F.concat_ws(" ", *[F.get(w, i + F.lit(j)) for j in range(k)]),
-    )
+    parts = ", ".join(f"get({w}, i + {j})" for j in range(k))
+    return (f"transform(sequence(0, greatest(size({w}) - {k}, 0)), "
+            f"i -> concat_ws(' ', {parts}))")
 
 
-def shingles(text: str | Column, k: int = 3) -> Column:
-    """Word k-shingles as joined strings (splits ``text`` itself).
-
-    Binds the split words array as a higher-order-function lambda
-    variable (a one-element ``transform``) so the split happens once per
-    row, not once per shingle — callers that already have a words column
-    should use :func:`shingles_of_words` directly."""
-    return F.get(
-        F.transform(
-            F.array(words(text)), lambda wv: shingles_of_words(wv, k)
-        ),
-        0,
-    )
-
-
-def shingle_hash(sh: Column) -> Column:
-    """Polynomial hash of a shingle's word codes (order-sensitive)."""
-    return F.aggregate(
-        F.split(sh, " "),
-        F.lit(0).cast("long"),
-        lambda acc, w: F.pmod(acc * 131 + word_code(w), F.lit(HASH_MOD)),
-    )
+def _shingle_hash_sql(sh: str) -> str:
+    """SQL for the polynomial hash of a shingle's word codes (order-sensitive;
+    a word's code is its first codepoint × its length)."""
+    return (f"aggregate(split({sh}, ' '), CAST(0 AS BIGINT), (acc, w) -> "
+            f"pmod(acc * 131 + ascii(w) * length(w), {HASH_MOD}))")
 
 
 def _doc_shingle_hashes(
@@ -106,15 +110,16 @@ def _doc_shingle_hashes(
     equals min over its set), and dropping the distinct removes a full
     shingle-count-sized exchange from the plan (r6, guide §2.4)."""
     if hash_fn == "poly":
-        h = shingle_hash(F.col("_s"))
+        h = _shingle_hash_sql("_s")
     elif hash_fn == "xxhash":
-        h = F.pmod(F.xxhash64(F.col("_s")), F.lit(HASH_MOD))
+        h = f"pmod(xxhash64(_s), {HASH_MOD})"
     else:
         raise ValueError(f"bad hash_fn {hash_fn!r}")
+    i = ident(id_col)
     out = (
-        df.select(id_col, F.split(F.col(text_col), " ").alias("_w"))
-        .select(id_col, F.explode(shingles_of_words(F.col("_w"), k)).alias("_s"))
-        .select(id_col, h.alias("sh"))
+        df.selectExpr(i, f"split({ident(text_col)}, ' ') AS _w")
+        .selectExpr(i, f"explode({_shingles_sql('_w', k)}) AS _s")
+        .selectExpr(i, f"{h} AS sh")
     )
     return out.distinct() if distinct else out
 
@@ -166,24 +171,19 @@ def minhash_signatures(
     hash_fn: str = "poly",
 ) -> DataFrame:
     """(id, sig: array<long>) — min over the permuted shingle-hash family
-    ``(a_i·h + b_i) mod p``."""
+    ``(a_i·h + b_i) mod p`` of :data:`MINHASH_PERMS`."""
     # distinct=False: min over the permuted hashes is duplicate-insensitive,
     # so the (id, shingle) dedup exchange is pure cost here — the groupBy's
     # map-side partial aggregation already reduces the explode to one row
     # per doc before the (doc-count-sized) shuffle (r6, guide §2.3/§2.4).
+    if num_perm > len(MINHASH_PERMS):
+        raise ValueError(f"num_perm={num_perm} exceeds the {len(MINHASH_PERMS)} "
+                         "permutations of MINHASH_PERMS")
     sh = _doc_shingle_hashes(df, id_col, text_col, k, hash_fn=hash_fn,
                              distinct=False)
-    sig_cols = [
-        F.min(
-            F.pmod(F.col("sh") * ((_PERM_A * (i + 1)) % HASH_MOD) + _PERM_B * (i + 1),
-                   F.lit(HASH_MOD))
-        ).alias(f"_m{i}")
-        for i in range(num_perm)
-    ]
-    sigs = sh.groupBy(id_col).agg(*sig_cols)
-    return sigs.select(
-        id_col, F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig")
-    )
+    mins = ", ".join(f"min(pmod(sh * {a} + {b}, {HASH_MOD}))"
+                     for a, b in MINHASH_PERMS[:num_perm])
+    return sh.groupBy(ident(id_col)).agg(F.expr(f"array({mins}) AS sig"))
 
 
 def minhash_lsh_pairs(
@@ -247,41 +247,23 @@ def minhash_band_pairs(
     from etna_spark.data.similarity import bucket_pairs
 
     rows_per_band = num_perm // bands
-    banded = sigs.select(
-        id_col,
-        F.transform("sig", lambda x: x.cast("int")).alias("_sig32"),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.aggregate(
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                        F.lit(0).cast("long"),
-                        lambda acc, x: F.pmod(acc * 131 + x, F.lit(HASH_MOD)),
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, "_sig32", "bb.band", "bb.bucket")
+    bucket = ("aggregate(slice(sig, b * {r} + 1, {r}), CAST(0 AS BIGINT), "
+              "(acc, x) -> pmod(acc * 131 + x, {p}))").format(r=rows_per_band,
+                                                               p=HASH_MOD)
+    banded = sigs.selectExpr(
+        ident(id_col),
+        "transform(sig, x -> CAST(x AS INT)) AS _sig32",
+        f"explode(transform(sequence(0, {bands - 1}), "
+        f"b -> struct(b AS band, {bucket} AS bucket))) AS bb",
+    ).selectExpr(ident(id_col), "_sig32", "bb.band", "bb.bucket")
     cand = bucket_pairs(banded, ("band", "bucket"), id_col=id_col,
                         max_bucket=max_bucket, payload_col="_sig32",
                         emit_payloads=True, distinct=False)
-    est = cand.select(
-        "id_a",
-        "id_b",
-        (
-            F.size(
-                F.filter(
-                    F.zip_with("pay_a", "pay_b",
-                               lambda x, y: (x == y).cast("int")),
-                    lambda v: v == 1,
-                )
-            )
-            / F.lit(num_perm)
-        ).alias("est_jaccard"),
-    )
-    return est.filter(F.col("est_jaccard") >= threshold).distinct()
+    agree = ("size(filter(zip_with(pay_a, pay_b, (x, y) -> CAST(x = y AS INT)), "
+             "v -> v = 1))")
+    est = cand.selectExpr("id_a", "id_b",
+                          f"{agree} / {num_perm} AS est_jaccard")
+    return est.where(f"est_jaccard >= {double(threshold)}").distinct()
 
 
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

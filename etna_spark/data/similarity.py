@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from etna_spark.sqltext import double, ident
+
 
 def dot(a: Column, b: Column) -> Column:
     """Deterministic left-to-right float64 dot product."""
@@ -42,6 +44,12 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of :func:`dot` over the SQL expressions ``a`` and ``b``."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+            "CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)")
 
 
 def norm(a: Column) -> Column:
@@ -363,7 +371,8 @@ def embedding_signatures(
     # plain array column keeps the struct out of the exploded rows.
     k = _sig_kernel(n_planes, dim, n_tables).asNondeterministic()
     return (
-        df.select(F.col(id_col).alias("_id"), k(F.col(vec_col)).alias("_k"))
+        df.select(F.col(ident(id_col)).alias("_id"),
+                  k(F.col(ident(vec_col))).alias("_k"))
         .select("_id", F.col("_k.pf").alias("_pf"),
                 F.col("_k.sig").alias("_sigs"))
         .select("_id", "_pf", F.posexplode("_sigs").alias("_table", "_sig"))
@@ -423,58 +432,40 @@ def bucket_pairs(
     if payload_col is None and (emit_payloads or max_payload_gap is not None):
         raise ValueError("emit_payloads/max_payload_gap require payload_col")
     if payload_col is not None:
-        entry = F.struct(
-            F.col(id_col).alias("i"), F.col(payload_col).alias("p")
-        )
+        entry = f"struct({ident(id_col)} AS i, {ident(payload_col)} AS p)"
     else:
-        entry = F.col(id_col)
-    members = keyed.groupBy(*bucket_cols).agg(
-        F.collect_list(entry).alias("_ms")
-    )
-    cond = F.size("_ms") >= 2
+        entry = ident(id_col)
+    members = keyed.groupBy(*map(ident, bucket_cols)).agg(
+        F.expr(f"collect_list({entry}) AS _ms"))
+    cond = "size(_ms) >= 2"
     if max_bucket is not None:
-        cond = cond & (F.size("_ms") <= max_bucket)
+        cond += f" AND size(_ms) <= {int(max_bucket)}"
     members = members.where(cond)
-    n = F.size(F.col("_ms"))
 
-    def expand(x, i):
-        rest = F.slice(F.col("_ms"), i + F.lit(2), n - i - F.lit(1))
-
-        # filter BEFORE building the normalized pair struct: the gap
-        # test is symmetric, so orientation does not matter, and
-        # skipping the struct + least/greatest for failing pairs avoids
-        # ~12× the survivor count in per-pair allocations at bench
-        # params (16.6M raw pairs → 1.37M surviving the projection bound).
-        # The id-inequality guard preserves the pre-r6 self-join
-        # contract (`id_a < id_b` strict): a duplicated id in dirty
-        # input must not emit an (x, x) pair (r6 review fix).
-        def keep(y):
-            if payload_col is None:
-                return y != x
-            c = y["i"] != x["i"]
-            if max_payload_gap is not None:
-                c = c & F.forall(
-                    F.zip_with(x["p"], y["p"],
-                               lambda a, b: F.abs(a - b) <= max_payload_gap),
-                    lambda ok: ok,
-                )
-            return c
-
-        rest = F.filter(rest, keep)
-        mk = lambda y: F.struct(  # noqa: E731
-            F.least(x, y).alias("a"), F.greatest(x, y).alias("b")
-        )
-        return F.transform(rest, mk)
-
-    pairs = F.flatten(F.transform(F.col("_ms"), expand))
-    if payload_col is not None:
-        sel = [F.col("_p.a.i").alias("id_a"), F.col("_p.b.i").alias("id_b")]
-        if emit_payloads:
-            sel += [F.col("_p.a.p").alias("pay_a"),
-                    F.col("_p.b.p").alias("pay_b")]
+    # filter BEFORE building the normalized pair struct: the gap test is
+    # symmetric, so orientation does not matter, and skipping the struct +
+    # least/greatest for failing pairs avoids ~12× the survivor count in
+    # per-pair allocations at bench params (16.6M raw pairs → 1.37M
+    # surviving the projection bound). The id-inequality guard preserves
+    # the pre-r6 self-join contract (`id_a < id_b` strict): a duplicated id
+    # in dirty input must not emit an (x, x) pair (r6 review fix).
+    if payload_col is None:
+        keep = "y != x"
     else:
-        sel = [F.col("_p.a").alias("id_a"), F.col("_p.b").alias("id_b")]
-    out = members.select(F.explode(pairs).alias("_p")).select(*sel)
+        keep = "y.i != x.i"
+        if max_payload_gap is not None:
+            keep += (" AND forall(zip_with(x.p, y.p, (a, b) -> "
+                     f"abs(a - b) <= {double(max_payload_gap)}), ok -> ok)")
+    rest = f"filter(slice(_ms, i + 2, size(_ms) - i - 1), y -> {keep})"
+    pairs = (f"flatten(transform(_ms, (x, i) -> transform({rest}, "
+             "y -> struct(least(x, y) AS a, greatest(x, y) AS b))))")
+    if payload_col is not None:
+        sel = ["_p.a.i AS id_a", "_p.b.i AS id_b"]
+        if emit_payloads:
+            sel += ["_p.a.p AS pay_a", "_p.b.p AS pay_b"]
+    else:
+        sel = ["_p.a AS id_a", "_p.b AS id_b"]
+    out = members.selectExpr(f"explode({pairs}) AS _p").selectExpr(*sel)
     return out.distinct() if distinct else out
 
 
@@ -549,28 +540,23 @@ def embedding_neardup_pairs(
                         max_payload_gap=bound)
     # per-vector norm computed ONCE per vector (same float chain as the
     # pair-wise cosine, so oracle values are unchanged)
-    vecs = df.select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_vv"),
-        norm(F.col(vec_col)).alias("_vn"),
+    vecs = df.selectExpr(
+        f"{ident(id_col)} AS _vid",
+        f"{ident(vec_col)} AS _vv",
+        f"sqrt({_dot_sql(ident(vec_col), ident(vec_col))}) AS _vn",
     ).hint("SHUFFLE_HASH")
+    # valid-norm guard: a degenerate vector yields null (dropped by the
+    # filter) instead of an ANSI DIVIDE_BY_ZERO. Spark orders NaN above
+    # every double, so an overflowed cosine (inf/inf) would pass any
+    # threshold without the isnan term.
+    valid = "(_na > 0 AND NOT isnan(_na)) AND (_vn > 0 AND NOT isnan(_vn))"
     return (
-        cand.join(vecs, on=F.col("id_a") == F.col("_vid"))
-        .select("id_a", "id_b", F.col("_vv").alias("_va"),
-                F.col("_vn").alias("_na"))
-        .join(vecs, on=F.col("id_b") == F.col("_vid"))
-        .withColumn(
-            "cosine_sim",
-            # valid-norm guard: a degenerate vector yields null (dropped
-            # by the filter) instead of an ANSI DIVIDE_BY_ZERO
-            F.when(
-                _valid_norm(F.col("_na")) & _valid_norm(F.col("_vn")),
-                dot(F.col("_va"), F.col("_vv"))
-                / (F.col("_na") * F.col("_vn")),
-            ),
-        )
-        # Spark orders NaN above every double, so an overflowed cosine
-        # (inf/inf) would pass any threshold without the isnan term
-        .filter((F.col("cosine_sim") >= threshold) & ~F.isnan("cosine_sim"))
-        .select("id_a", "id_b", "cosine_sim")
+        cand.join(vecs, on=F.expr("id_a = _vid"))
+        .selectExpr("id_a", "id_b", "_vv AS _va", "_vn AS _na")
+        .join(vecs, on=F.expr("id_b = _vid"))
+        .selectExpr(
+            "id_a", "id_b",
+            f"CASE WHEN {valid} THEN {_dot_sql('_va', '_vv')} / (_na * _vn) "
+            "END AS cosine_sim")
+        .where(f"cosine_sim >= {double(threshold)} AND NOT isnan(cosine_sim)")
     )

@@ -14,8 +14,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from etna_spark.sqltext import ident, over
 
 
 def lag_transform(
@@ -38,9 +40,25 @@ def lag_transform(
     if any(k <= 0 for k in lags):
         raise ValueError("all lags must be positive")
     prefix = out_prefix or f"{in_col}_lag"
-    w = Window.partitionBy(*series_cols).orderBy(ts_col)
-    cols = {f"{prefix}_{k}": F.lag(in_col, k).over(w) for k in lags}
-    return df.withColumns(cols)
+    return df.withColumns({f"{prefix}_{k}": _lag(in_col, k, series_cols, ts_col)
+                           for k in lags})
+
+
+def _lag(col: str, k: int, series_cols: Sequence[str], ts_col: str) -> Column:
+    """``col`` shifted back ``k`` rows within its series, in time order."""
+    return F.expr(f"lag({ident(col)}, {int(k)}) {over(series_cols, ident(ts_col))}")
+
+
+def _shift(df: DataFrame, shifts: dict[str, int], series_cols: Sequence[str],
+           ts_col: str) -> DataFrame:
+    """Replace each column ``c`` of ``shifts`` by ``c_shift_{k}``, its lag
+    by ``k``, appended after the other columns."""
+    if not shifts:
+        return df
+    return df.withColumns({
+        f"{c}_shift_{k}": _lag(c, k, series_cols, ts_col)
+        for c, k in shifts.items()
+    }).drop(*shifts)
 
 
 class LagTransform:
@@ -82,11 +100,7 @@ def exog_shift(
     """Shift exog columns forward ``horizon`` steps (rename ``c`` →
     ``c_shift_{h}``) so models at forecast time only see values that were
     known then. The simple fixed-lag mode of ExogShiftTransform."""
-    w = Window.partitionBy(*series_cols).orderBy(ts_col)
-    out = df
-    for c in cols:
-        out = out.withColumn(f"{c}_shift_{horizon}", F.lag(c, horizon).over(w)).drop(c)
-    return out
+    return _shift(df, {c: horizon for c in cols}, series_cols, ts_col)
 
 
 class ExogShiftAuto:
@@ -172,14 +186,8 @@ class ExogShiftAuto:
     def transform(self, df: DataFrame) -> DataFrame:
         if self.shifts is None:
             raise ValueError("Transform is not fitted!")
-        w = Window.partitionBy(*self.series_cols).orderBy(self.ts_col)
-        out = df
-        for c, k in self.shifts.items():
-            if k > 0:
-                out = out.withColumn(
-                    f"{c}_shift_{k}", F.lag(c, k).over(w)
-                ).drop(c)
-        return out
+        return _shift(df, {c: k for c, k in self.shifts.items() if k > 0},
+                      self.series_cols, self.ts_col)
 
     def fit_transform(self, df: DataFrame) -> DataFrame:
         return self.fit(df).transform(df)

@@ -22,10 +22,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etna_spark.operators.rollup import TIERS
+from etna_spark.sqltext import RUNNING, ident, over
 
 
 def calendar_spine(
@@ -101,79 +102,48 @@ def regularize(
     (misalignment-tolerant variant) — no back-fill, spine size = Σ spans.
     """
     step_seconds, _ = TIERS[tier]
-    step = F.expr(f"interval {step_seconds} seconds")
-    w = Window.partitionBy(*series_cols).orderBy(ts_col)
+    step = f"interval {step_seconds} seconds"
+    ts = ident(ts_col)
+    w = over(series_cols, ts)
     value_cols = [c for c in tier_df.columns
                   if c not in (*series_cols, ts_col)]
-    value_types = {f.name: f.dataType for f in tier_df.schema.fields}
-    nxt = F.lead(ts_col).over(w)
-    base = tier_df
+    nxt = f"lead({ts}) {w}"
     if per_series:
-        base = base.withColumn("_start", F.col(ts_col)).withColumn(
-            "_end", F.greatest(F.coalesce(nxt - step, F.col(ts_col)),
-                               F.col(ts_col))
-        )
+        base = tier_df.withColumns({
+            "_start": F.expr(ts),
+            "_end": F.expr(f"greatest(coalesce({nxt} - {step}, {ts}), {ts})"),
+        })
     else:
-        bounds = tier_df.agg(
-            F.min(ts_col).alias("_mn"), F.max(ts_col).alias("_mx")
-        )
+        bounds = tier_df.agg(F.expr(f"min({ts}) AS _mn"),
+                             F.expr(f"max({ts}) AS _mx"))
         # bucketed-input contract, enforced: every timestamp must sit on
         # the step grid anchored at the global min — otherwise the value
         # mask (_sts == _orig) would silently DROP the unaligned
         # observations (the old spine left-join preserved them). The
         # assert rides inside the _start expression so column pruning
         # can't elide it; per-row pmod is JVM-side and negligible.
-        aligned = (
-            F.pmod(
-                F.col(ts_col).cast("long") - F.col("_mn").cast("long"),
-                F.lit(step_seconds),
-            )
-            == 0
-        )
-        start_expr = F.when(F.col("_rn") == 1, F.col("_mn")).otherwise(
-            F.col(ts_col)
-        )
-        base = (
-            base.crossJoin(F.broadcast(bounds))
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn(
-                "_start",
-                F.when(
-                    F.assert_true(
-                        aligned,
-                        F.lit(
-                            "regularize: input timestamps are not aligned "
-                            f"to the {tier} grid anchored at the global "
-                            "min — bucket the input (date_trunc) first; "
-                            "unaligned rows would be silently dropped"
-                        ),
-                    ).isNull(),
-                    start_expr,
-                ),
-            )
-            .withColumn(
-                "_end",
-                F.greatest(F.coalesce(nxt - step, F.col("_mx")),
-                           F.col(ts_col)),
-            )
-        )
-    exploded = base.select(
-        *series_cols,
-        F.col(ts_col).alias("_orig"),
-        *value_cols,
-        F.explode(
-            F.sequence(F.col("_start"), F.col("_end"), step)
-        ).alias("_sts"),
+        aligned = (f"pmod(CAST({ts} AS BIGINT) - CAST(_mn AS BIGINT), "
+                   f"{step_seconds}) = 0")
+        msg = ("regularize: input timestamps are not aligned to the "
+               f"{tier} grid anchored at the global min — bucket the input "
+               "(date_trunc) first; unaligned rows would be silently dropped")
+        base = tier_df.crossJoin(F.broadcast(bounds)).withColumns({
+            "_start": F.expr(
+                f"CASE WHEN assert_true({aligned}, '{msg}') IS NULL THEN "
+                f"CASE WHEN row_number() {w} = 1 THEN _mn ELSE {ts} END END"),
+            "_end": F.expr(f"greatest(coalesce({nxt} - {step}, _mx), {ts})"),
+        })
+    exploded = base.selectExpr(
+        *map(ident, series_cols),
+        f"{ts} AS _orig",
+        *map(ident, value_cols),
+        f"explode(sequence(_start, _end, {step})) AS _sts",
     )
-    return exploded.select(
-        *series_cols,
-        F.col("_sts").alias(ts_col),
-        *[
-            F.when(F.col("_sts") == F.col("_orig"), F.col(f"`{c}`"))
-            .otherwise(F.lit(None).cast(value_types[c]))
-            .alias(c)
-            for c in value_cols
-        ],
+    return exploded.selectExpr(
+        *map(ident, series_cols),
+        f"_sts AS {ts}",
+        *[f"CASE WHEN _sts = _orig THEN {ident(c)} END AS {ident(c)}"
+          for c in value_cols],
     )
 
 
@@ -189,15 +159,9 @@ def ffill(
     (/root/reference/etna/transforms/missing_values/imputation.py:229-230) —
     an implicit as-of join against the last observation; leading nulls stay.
     """
-    w = (
-        Window.partitionBy(*series_cols)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out
+    w = over(series_cols, ident(ts_col), RUNNING)
+    return df.withColumns(
+        {c: F.expr(f"last({ident(c)}, true) {w}") for c in cols})
 
 
 def interpolate_linear(
@@ -217,31 +181,24 @@ def interpolate_linear(
     # WindowExec accumulates those in O(n), whereas a (current..
     # unboundedFollowing) frame is recomputed per row — O(n²) per partition,
     # catastrophic on long spines. "Next non-null" is therefore a running
-    # F.last over the DESCENDING time order.
-    wb = (
-        Window.partitionBy(*series_cols)
-        .orderBy(ts_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = (
-        Window.partitionBy(*series_cols)
-        .orderBy(F.col(ts_col).desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    ts_num = F.col(ts_col).cast("double")
-    out = df
+    # last() over the DESCENDING time order.
+    ts = ident(ts_col)
+    wb = over(series_cols, ts, RUNNING)
+    wf = over(series_cols, f"{ts} DESC", RUNNING)
+    ts_num = f"CAST({ts} AS DOUBLE)"
+    out = {}
     for c in cols:
-        prev_v = F.last(c, ignorenulls=True).over(wb)
-        next_v = F.last(c, ignorenulls=True).over(wf)
-        prev_t = F.last(F.when(F.col(c).isNotNull(), ts_num), ignorenulls=True).over(wb)
-        next_t = F.last(F.when(F.col(c).isNotNull(), ts_num), ignorenulls=True).over(wf)
-        frac = (ts_num - prev_t) / (next_t - prev_t)
-        interp = prev_v + (next_v - prev_v) * frac
-        out = out.withColumn(
-            c,
-            F.when(F.col(c).isNotNull(), F.col(c))
-            .when(prev_v.isNull(), F.lit(None))  # leading gap: stays null
-            .when(next_v.isNull(), prev_v)  # trailing gap: ffill
-            .otherwise(interp),
-        )
-    return out
+        v = ident(c)
+        prev_v = f"last({v}, true) {wb}"
+        next_v = f"last({v}, true) {wf}"
+        t_obs = f"CASE WHEN {v} IS NOT NULL THEN {ts_num} END"
+        prev_t = f"last({t_obs}, true) {wb}"
+        next_t = f"last({t_obs}, true) {wf}"
+        frac = f"(({ts_num} - {prev_t}) / ({next_t} - {prev_t}))"
+        interp = f"({prev_v} + ({next_v} - {prev_v}) * {frac})"
+        out[c] = F.expr(
+            f"CASE WHEN {v} IS NOT NULL THEN {v} "
+            f"WHEN {prev_v} IS NULL THEN NULL "  # leading gap: stays null
+            f"WHEN {next_v} IS NULL THEN {prev_v} "  # trailing gap: ffill
+            f"ELSE {interp} END")
+    return df.withColumns(out)

@@ -35,9 +35,11 @@ from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from etna_spark.sqltext import RUNNING, double, ident, over, rows_back
 
 NATIVE_AGGS = {"mean", "sum", "min", "max", "std", "minmaxdiff"}
 ALL_AGGS = NATIVE_AGGS | {"median", "quantile", "mad"}
@@ -137,32 +139,17 @@ def window_stat(
         and (agg != "std" or ddof == 1)
     )
     if native:
-        if window == -1:
-            frame = Window.partitionBy(*series_cols).orderBy(ts_col).rowsBetween(
-                Window.unboundedPreceding, 0
-            )
-        else:
-            frame = Window.partitionBy(*series_cols).orderBy(ts_col).rowsBetween(
-                -(window - 1), 0
-            )
-        v = F.col(in_col)
-        if agg == "mean":
-            expr = F.avg(v).over(frame)
-        elif agg == "sum":
-            expr = F.sum(v).over(frame)
-        elif agg == "min":
-            expr = F.min(v).over(frame)
-        elif agg == "max":
-            expr = F.max(v).over(frame)
-        elif agg == "minmaxdiff":
-            expr = F.max(v).over(frame) - F.min(v).over(frame)
-        else:  # std, ddof=1 — null when <2 points, like nanstd ddof=1
-            expr = F.stddev_samp(v).over(frame)
-        cnt = F.count(v).over(frame)
-        result = F.when(cnt >= F.lit(min_periods), expr)
-        return df.withColumn(
-            out_col, F.coalesce(result, F.lit(float(fillna))).cast("double")
-        )
+        ts = ident(ts_col)
+        w = over(series_cols, ts, RUNNING if window == -1 else rows_back(window - 1))
+        v = ident(in_col)
+        if agg == "minmaxdiff":
+            expr = f"max({v}) {w} - min({v}) {w}"
+        else:  # std is ddof=1: null below 2 points, like nanstd ddof=1
+            fn = {"mean": "avg", "std": "stddev_samp"}.get(agg, agg)
+            expr = f"{fn}({v}) {w}"
+        return df.withColumns({out_col: F.expr(
+            f"CAST(coalesce(CASE WHEN count({v}) {w} >= {int(min_periods)} "
+            f"THEN {expr} END, {double(fillna)}) AS DOUBLE)")})
 
     # pUDF path: whole-series numpy kernel per group, Arrow-batched.
     out_schema = StructType(

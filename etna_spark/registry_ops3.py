@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etna_spark.codec.gorilla import decode_series, encode_series
-from etna_spark.data.dedup import minhash_lsh_pairs, simhash_pairs
+from etna_spark.data.dedup import MINHASH_PERMS, minhash_lsh_pairs, simhash_pairs
 from etna_spark.data.similarity import cosine_topk_lsh
 from etna_spark.operators.imputation import TimeSeriesImputer
 from etna_spark.operators.resample import ResampleWithDistribution
@@ -216,6 +216,10 @@ def q_gorilla(spark: SparkSession, sf_dir: str) -> DataFrame:
     return match.join(sizes, on="source")
 
 
+# the permutation table of minhash_signatures, as (i, a_i, b_i) rows
+_MINHASH_PERMS_SQL = ", ".join(
+    f"({i}, {a}, {b})" for i, (a, b) in enumerate(MINHASH_PERMS[:16]))
+
 _MINHASH_SQL = """
 WITH sh AS (
   SELECT DISTINCT doc_id,
@@ -234,9 +238,8 @@ WITH sh AS (
 ), sig AS (
   SELECT doc_id, list(m ORDER BY i) AS sig FROM (
     SELECT doc_id, i,
-      min((sh * ((1103515245 * (i + 1)) % 1000000007) + 12345 * (i + 1))
-          % 1000000007) AS m
-    FROM sh CROSS JOIN (SELECT unnest(range(0, 16)) AS i) perms
+      min((sh * a + b) % 1000000007) AS m
+    FROM sh CROSS JOIN (VALUES """ + _MINHASH_PERMS_SQL + """) perms(i, a, b)
     GROUP BY doc_id, i
   ) GROUP BY doc_id
 ), banded AS (

@@ -61,6 +61,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # PySpark wraps every Column method and F.* function in call-site
+        # capture: a stack walk plus extra JVM round trips per call, paid
+        # while a plan is built on the driver (with the SQL-text operators,
+        # a perfbench query_dedup round went from 4,229 py4j calls to 863).
+        # The cost: an error raised for a Column expression no longer
+        # carries the Python file:line that built it; the JVM error still
+        # names the expression. PySpark reads this once per process, from
+        # the first active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

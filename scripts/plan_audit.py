@@ -5,8 +5,11 @@ explain("formatted") at sf0.01. Explain-only — nothing executes.
 
 Usage: python scripts/plan_audit.py [out.json]
 """
+import contextlib
+import io
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -15,18 +18,23 @@ import __spark_entry__ as ent
 from etna_spark.session import get_spark
 
 
+def _plan(df) -> str:
+    """The formatted physical plan, as ``df.explain`` prints it."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
 def main():
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/plan_audit.json"
     spark = get_spark("plan-audit", master="local[2]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     sf = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted")
     rows = {}
     for name, fn in sorted(ent.queries().items()):
         try:
-            df = fn(spark, sf)
-            p = df._jdf.queryExecution().explainString(mode)
+            p = _plan(fn(spark, sf))
         except Exception as e:  # noqa: BLE001
             rows[name] = {"err": f"{type(e).__name__}: {e}"}
             continue
@@ -34,9 +42,7 @@ def main():
         # lines list every node exactly once, including the tree ROOT,
         # which the former tree-prefix filter ("+-"/":" markers) missed
         # (a root Sort/Exchange under-counted by one; r6 review fix).
-        import re as _re
-
-        ops = _re.findall(r"^\(\d+\) ([A-Za-z]+)", p, _re.M)
+        ops = re.findall(r"^\(\d+\) ([A-Za-z]+)", p, re.M)
         tree = [ln for ln in p.splitlines()
                 if ("+-" in ln or ln.startswith("Execute") or
                     ln.lstrip().startswith(":"))]

@@ -67,6 +67,42 @@ def test_minhash_lsh_recalls_neardups(spark):
     assert (1, 3) not in pairs
 
 
+def test_minhash_single_colliding_shingle_does_not_pair(spark):
+    """Two docs whose only link is one shingle hash they share by collision
+    (same word codes, different words) must not pair. The shared hash is
+    chosen so that a family of permutations that are all multiples of one
+    value, (i+1)·(A·h + B) mod p, maps it below every other shingle in all
+    16 permutations: such a family pairs these docs with an estimate of
+    1.0, an independent family gives them the agreement of unrelated docs.
+    A planted near-copy (docs 3 and 4) still pairs."""
+    from etna_spark.data.dedup import _doc_shingle_hashes
+
+    collide = (30, 87, 104)  # word lengths of the colliding shingle
+    rows = [
+        (1, " ".join([chr(99 + j) * (j + 2) for j in range(10)]
+                     + ["a" * n for n in collide])),
+        (2, " ".join([chr(110 + j) * (j + 2) for j in range(10)]
+                     + ["a" + "b" * (n - 1) for n in collide])),
+        (3, " ".join(f"w{j}" * (j % 5 + 1) for j in range(20))),
+        (4, " ".join(f"w{j}" * (j % 5 + 1) for j in range(19)) + " zz"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sh = {}
+    for r in _doc_shingle_hashes(docs, "doc_id", "text", 3).collect():
+        sh.setdefault(r["doc_id"], set()).add(r["sh"])
+    assert len(sh[1] & sh[2]) == 1
+    pairs = {(r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(
+        docs, num_perm=16, bands=4, threshold=0.5).collect()}
+    assert pairs == {(3, 4)}
+
+
+def test_minhash_num_perm_beyond_table_raises(spark):
+    from etna_spark.data.dedup import MINHASH_PERMS
+
+    with pytest.raises(ValueError, match="MINHASH_PERMS"):
+        minhash_signatures(_docs(spark), num_perm=len(MINHASH_PERMS) + 1)
+
+
 def test_simhash_pairs(spark):
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -337,3 +338,21 @@ def test_funnel_stages_and_cohorts_have_no_python(spark):
         plan = _plan(q)
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
         assert "CartesianProduct" not in plan
+
+
+def test_gorilla_decode_is_one_map_in_arrow(spark):
+    """Each blob decodes on its own: the decode plan over stored blobs is one
+    MapInArrow, with no shuffle and no grouped pandas function."""
+    from etna_spark.codec.gorilla import decode_series, encode_series
+
+    tier = spark.sql(
+        "SELECT concat('s', id % 3) AS source, timestamp_seconds(id * 60) "
+        "AS bucket_ts, CAST(id AS DOUBLE) AS v FROM range(100)")
+    enc = spark.createDataFrame(
+        encode_series(tier, ts_col="bucket_ts", value_col="v").toPandas())
+    dec = decode_series(enc, ts_col="bucket_ts", value_col="v")
+    ops = re.findall(r"^\(\d+\) ([A-Za-z]+)", _plan(dec), re.M)
+    assert ops.count("MapInArrow") == 1
+    assert not any(o.endswith("Exchange") for o in ops)
+    assert "FlatMapGroupsInPandas" not in ops
+    assert dec.count() == 100

@@ -442,8 +442,8 @@ def _direct(df, tier):
 
 def test_late_row_after_retention(spark, tokens_df, tmp_path):
     """A late row for a day the 1m tier has already expired: 1m, whose
-    retention cutoff is past that day, is skipped and holds no partition of
-    it; 1h and 1d merge it into their own rows of that day, so they still
+    retention cutoff is past that day, is skipped, holds no partition of it
+    and still advances its watermark past the delta; 1h and 1d merge it into their own rows of that day, so they still
     equal a direct rollup of all input. The coarser tiers' lineage for the
     day records as rows in the finer tier's points out: 1h takes 1m's
     newest lineage record of the day (from before it expired), 1d takes
@@ -462,6 +462,11 @@ def test_late_row_after_retention(spark, tokens_df, tmp_path):
     assert r["1m"]["skipped"]
     assert all(r[t]["partitions"] == ["2026-01-01"] for t in ("1h", "1d"))
     assert "2026-01-01" not in eng.tiers["1m"].partitions()
+    # 1m has nothing to merge from this delta, and its watermark moves past
+    # it, so no later refresh reads the delta again
+    cur = eng.input.current_snapshot_id()
+    assert all(int(eng.tiers[t].latest_property("input_snapshot_id")) == cur
+               for t in TIERS)
     everything = tokens_df.unionByName(late)
     kept_1m = _direct(everything, "1m").filter(F.col("part_day") >= "2026-01-02")
     assert _tiers_equal(eng.tier_df(spark, "1m").select(*kept_1m.columns), kept_1m)
